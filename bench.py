@@ -255,7 +255,8 @@ def main():
         "queries": timings,
         "n_failed": len(timings) - len(ok),
         "sf": sf_val,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        # local[*] runs on every core; name the count, not the glob
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())),
     }
     # Sidecar detail file (r16): the per-query line below overflows the
     # driver's 2000-char stdout tail at 136 queries, so PERF_r15 had

@@ -7,8 +7,9 @@ the iterative min-label propagation this repo already ships for
 near-dup components (operators/dedup.py connected_components) — so
 this follows the same Spark-first shape: a driver loop of
 join + map-side-combined aggregate rounds over DataFrames, lineage
-truncated per round (the round-9 label-propagation lesson:
-localCheckpoint, or Catalyst tree formatting OOMs on deep plans).
+truncated by localCheckpoint every few rounds (the round-9
+label-propagation lesson: Catalyst tree formatting OOMs on deep
+plans).
 
 Exactness contract (the registry/oracle bar): ranks are held in
 SCALED INTEGER arithmetic — contributions are ``rank div outdeg``
@@ -20,8 +21,10 @@ point anywhere.
 
 100 TB shape: the per-iteration bill is ONE shuffle join of the edge
 table with the node-keyed rank table on src (edges are pre-joined
-with out-degrees once and persisted, partitioned by src so only the
-rank side exchanges) and ONE dst-keyed aggregate whose exchange is
+with out-degrees once and cached by a lazy localCheckpoint,
+partitioned by src so only the rank side exchanges; the first round
+needs no join at all, since every initial rank is a function of the
+node id) and ONE dst-keyed aggregate whose exchange is
 map-side combined — per-partition state is one partial sum per
 distinct dst in the partition, and celebrity in-degree skew collapses
 map-side exactly like any skewed groupBy-sum. Rank state is
@@ -33,6 +36,7 @@ in-sum is bounded by num · N · scale, so pick scale ≤ 2^62 / (num·N)
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pyspark.sql.functions as F
@@ -56,6 +60,9 @@ _PERSIST_INPUT_BYTES = int(
     os.environ.get("SPARK_GRAFT_GRAPH_PERSIST_BYTES", str(64 << 20))
 )
 
+_log = logging.getLogger("dask_spark")
+_probe_warned = False  # _scan_bytes warns once per process
+
 
 def _scan_bytes(sdf) -> int:
     """Sum of the leaf relations' stats sizes in ``sdf``'s ANALYZED
@@ -65,14 +72,34 @@ def _scan_bytes(sdf) -> int:
     analysis already ran eagerly when the DataFrame was built, so the
     probe is O(plan nodes) on the driver, while forcing optimization
     here would pay a fresh Catalyst pass per call (~0.1-0.4 s,
-    measured)."""
+    measured).
+
+    A leaf whose size is the ``spark.sql.defaultSizeInBytes``
+    sentinel has no statistics: a LogicalRDD without origin stats,
+    such as an RDD-backed frame (a checkpoint's LogicalRDD keeps the
+    stats of the plan it cut, so it counts at that size). Such a
+    leaf is already materialized (re-reading it costs no base-table
+    I/O), so it counts 0 instead of Long.MaxValue, which would force
+    a second checkpoint of data that is already cut. If the probe
+    itself fails the answer is 0 (no cache: the plan stays correct,
+    only the optimization is lost), and that is logged once."""
+    global _probe_warned
     try:
+        default = sdf._jdf.sparkSession().sessionState().conf() \
+            .defaultSizeInBytes()
         leaves = sdf._jdf.queryExecution().analyzed().collectLeaves()
-        return sum(
+        sizes = (
             int(leaves.apply(i).stats().sizeInBytes())
             for i in range(leaves.size())
         )
-    except Exception:
+        return sum(b for b in sizes if b != default)
+    except Exception as exc:
+        if not _probe_warned:
+            _probe_warned = True
+            _log.warning(
+                "graph cache probe failed (%s: %s); size-adaptive "
+                "caching is off for this input", type(exc).__name__, exc,
+            )
         return 0
 
 
@@ -135,6 +162,14 @@ def pagerank(edges, src_col: str = "src", dst_col: str = "dst",
     budget: num · Σranks and r · w_max must stay under 2^63 — shrink
     ``scale`` as N grows (10^8 at 10^9 nodes still keeps 8 exact
     digits).
+
+    Caching and failure: the degree-joined edge table (and, in
+    directed mode, the node set) is cached by a lazy
+    ``localCheckpoint``, not ``persist()``, so a call leaves no entry
+    in the session's cache manager; the blocks are freed once the
+    result's plan is garbage-collected. As with every checkpoint in
+    this module, a lost checkpoint block fails the query rather than
+    recomputing it.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -170,58 +205,55 @@ def pagerank(edges, src_col: str = "src", dst_col: str = "dst",
         deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
     else:
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = e.join(deg, "src").persist()
-    if symmetric:
-        # every node appears as a src (its reversed edge), so deg's
-        # key set IS the node set — skip the union-distinct scan; and
-        # every node also has an in-edge, so the per-round left join
-        # below is skipped too (the in-sum covers all nodes).
-        nodes = deg.select(F.col("src").alias("node")).persist()
-    else:
+    # ed is read once per round. A lazy localCheckpoint caches it
+    # without the near-empty AQE job per reference that a persist()ed
+    # relation costs (lifetime and failure: see the docstring).
+    ed = e.join(deg, "src").localCheckpoint(eager=False)
+    # directed mode needs the node set for the per-round left join
+    # (nodes without in-edges still get the teleport share); in
+    # symmetric mode every node has an in-edge, so the in-sum already
+    # covers all nodes and no node table is built at all.
+    if not symmetric:
         nodes = (
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
-            .distinct().persist()
+            .distinct().localCheckpoint(eager=False)
         )
 
     teleport = (int(scale) * (damping_den - damping_num)) // damping_den
     damp = F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
 
-    def tele_expr():
-        t = F.lit(teleport).cast("bigint")
+    def seeded(value, node):
+        v = F.lit(value).cast("bigint")
         if seed_fn is None:
-            return t
-        return F.when(seed_fn(F.col("node")), t).otherwise(
-            F.lit(0).cast("bigint")
-        )
+            return v
+        return F.when(seed_fn(node), v).otherwise(F.lit(0).cast("bigint"))
 
-    init = F.lit(int(scale)).cast("bigint")
-    if seed_fn is not None:
-        init = F.when(seed_fn(F.col("node")), init).otherwise(
-            F.lit(0).cast("bigint")
-        )
+    tele = seeded(teleport, F.col("node"))
     contrib_expr = (
         "(r * w) div outdeg" if weight_col is not None else "r div outdeg"
     )
-    ranks = nodes.select("node", init.alias("r"))
+    # round 1 needs no rank table: every src starts at its initial
+    # rank (scale, or scale/0 under seed_fn), a pure function of src
+    ranked = ed.withColumn("r", seeded(int(scale), F.col("src")))
     n_it = int(iters)
     for i in range(n_it):
-        contrib = ed.join(ranks, ed["src"] == ranks["node"]).select(
-            "dst", F.expr(contrib_expr).alias("c")
-        )
+        if i:
+            ranked = ed.join(ranks, ed["src"] == ranks["node"])
+        contrib = ranked.select("dst", F.expr(contrib_expr).alias("c"))
         insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
         if symmetric:
             ranks = insum.select(F.col("dst").alias("node"),
-                                 (tele_expr() + damp).alias("r"))
+                                 (tele + damp).alias("r"))
         else:
             ranks = nodes.join(
                 insum, nodes["node"] == insum["dst"], "left"
-            ).select("node", (tele_expr() + damp).alias("r"))
+            ).select("node", (tele + damp).alias("r"))
         # lineage truncation every 3 rounds, never after the last:
         # each lazy checkpoint still materializes as its own job at
         # action time (a whole-job scheduling floor), and ranks is
         # single-referenced per iteration, so shallow chains are safe
-        # to leave fused — 3-iteration pagerank runs as ONE job now
+        # to leave fused
         if (i + 1) % 3 == 0 and (i + 1) < n_it:
             ranks = ranks.localCheckpoint(eager=False)
     return DaskFrame(ranks.select("node", F.col("r").alias("rank")))

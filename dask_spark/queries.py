@@ -2753,9 +2753,9 @@ def corpus_pagerank(spark, sf_dir):
     int64 in-sums, damping 85/100 as integer mul-div) — bit-identical
     to the oracle's unrolled replay, zero floating point. Top 100
     nodes by (rank desc, node). 100 TB shape: one src-keyed edge join
-    + one map-side-combined dst aggregate per iteration, rank state
-    stays distributed, lineage truncated per round
-    (operators/graph.py pagerank)."""
+    + one map-side-combined dst aggregate per iteration (the first
+    round needs no join), rank state stays distributed, lineage
+    truncated every 3 rounds (operators/graph.py pagerank)."""
     from dask_spark.operators.graph import pagerank
 
     li = load(spark, sf_dir, "lineitem")._sdf
@@ -3080,8 +3080,8 @@ def graph_ppr(spark, sf_dir):
     part ordered twice in an order pulls twice the rank share
     ((r·w) div Σw — still pure int64, bit-identical to the oracle's
     unrolled replay). Same one-join + one-aggregate iteration bill as
-    corpus_pagerank (operators/graph.py pagerank(weight_col=,
-    seed_fn=))."""
+    corpus_pagerank, lineage truncated every 3 rounds
+    (operators/graph.py pagerank(weight_col=, seed_fn=))."""
     from dask_spark.operators.graph import pagerank
 
     li = load(spark, sf_dir, "lineitem")._sdf

@@ -2333,6 +2333,158 @@ def test_pagerank_partitioning_invariant(spark):
     assert ra == rb
 
 
+@pytest.mark.parametrize("symmetric", [False, True])
+def test_pagerank_single_round(spark, symmetric):
+    """iters=1 on its own: round 1 is computed from the edge table
+    (every src at its initial rank) without a rank-table join, so it
+    must still match the replay exactly — including the directed
+    graph's dangling node 6 and in-edge-free nodes 4 and 5."""
+    from dask_spark.operators.graph import pagerank
+
+    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 1), (1, 2),
+             (3, 6)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    got = {r["node"]: r["rank"] for r in
+           pagerank(df, iters=1, scale=10 ** 9, symmetric=symmetric)
+           .to_spark().collect()}
+    if symmetric:
+        edges = edges + [(b, a) for a, b in edges]
+    assert got == _pagerank_py(edges, iters=1, scale=10 ** 9)
+
+
+def _weighted_pagerank_py(ew, seeds, iters, scale, num=85, den=100):
+    """Integer replay of weighted, seeded pagerank over merged edge
+    weights ``ew`` {(src, dst): w}."""
+    from collections import defaultdict
+
+    tele = scale * (den - num) // den
+    wsum = defaultdict(int)
+    for (s, _), w in ew.items():
+        wsum[s] += w
+    nodes = sorted({n for e in ew for n in e})
+    r = {n: (scale if n in seeds else 0) for n in nodes}
+    for _ in range(iters):
+        acc = defaultdict(int)
+        for (s, d), w in ew.items():
+            acc[d] += (r[s] * w) // wsum[s]
+        r = {n: (tele if n in seeds else 0) + (num * acc[n]) // den
+             for n in nodes}
+    return r
+
+
+@pytest.mark.parametrize("iters", [1, 4])
+def test_pagerank_ppr_mode_python_replay(spark, iters):
+    """graph_ppr's mode — symmetric + weight_col + seed_fn — vs a
+    literal integer replay on a bipartite order(even)↔part(odd) graph
+    with parallel rows and one row already reversed, so a pair's
+    weight merges from both directions. iters=4 also crosses the
+    every-3-rounds lineage checkpoint."""
+    from collections import defaultdict
+
+    from dask_spark.operators.graph import pagerank
+
+    raw = [(2, 1), (2, 3), (2, 3), (4, 3), (4, 5), (6, 1), (6, 1),
+           (6, 7), (8, 7), (3, 2)]
+    df = spark.createDataFrame([(a, b, 1) for a, b in raw],
+                               "src bigint, dst bigint, w bigint")
+    got = {r["node"]: r["rank"] for r in
+           pagerank(df, iters=iters, scale=10 ** 9, symmetric=True,
+                    weight_col="w", seed_fn=lambda n: n % 2 == 1)
+           .to_spark().collect()}
+    ew = defaultdict(int)
+    for a, b in raw:
+        ew[(a, b)] += 1
+        ew[(b, a)] += 1
+    seeds = {n for e in ew for n in e if n % 2 == 1}
+    assert got == _weighted_pagerank_py(ew, seeds, iters, 10 ** 9)
+
+
+@pytest.mark.parametrize("mode", [
+    {},
+    {"symmetric": True},
+    {"symmetric": True, "weight_col": "w", "seed_fn": lambda n: n % 2 == 1},
+], ids=["directed", "symmetric", "ppr"])
+def test_pagerank_leaves_no_cache_entry(spark, mode):
+    """pagerank caches with lazy checkpoints, not persist(): after the
+    result is collected the session's cache manager is empty."""
+    from dask_spark.operators.graph import pagerank
+
+    edges = [(i, (i * 7 + 3) % 40, 1) for i in range(200)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint, w bigint")
+    spark.catalog.clearCache()
+    pagerank(df, iters=3, **mode).to_spark().collect()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+
+
+def test_pagerank_symmetric_job_count(spark):
+    """A symmetric 3-round run on a fixed small graph runs at most 10
+    Spark jobs (it was 15 when round 1 joined a persisted node table
+    and the edges were persist()-cached). Jobs are counted by job-id
+    range. The count is an upper bound because AQE varies it: most
+    runs take 9 jobs, and now and then AQE resubmits one small stage
+    as a tenth."""
+    from dask_spark.operators.graph import pagerank
+
+    edges = [(i, (i * 7 + 3) % 40) for i in range(200)]
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    pagerank(df, iters=3, symmetric=True).to_spark().collect()
+    assert dag.numTotalJobs() - first <= 10
+
+
+@pytest.mark.parametrize("name", ["corpus_pagerank", "graph_ppr"])
+def test_graph_rank_queries_match_oracle(spark, sf_dir, name):
+    """The two pagerank registry queries equal their DuckDB oracles
+    row for row (the same comparison scripts/verify_local.py runs)."""
+    import duckdb
+
+    from dask_spark.queries import REGISTRY
+    from scripts.verify_local import compare
+
+    fn, oracle = REGISTRY[name]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM "
+            f"'{sf_dir}/lineitem.parquet'")
+    assert compare(fn(spark, sf_dir).toPandas(), con.sql(oracle).df()) is None
+
+
+def test_scan_bytes_skips_leaves_without_stats(spark, sf_dir):
+    """A leaf whose size is the defaultSizeInBytes sentinel (an
+    RDD-backed frame) is already materialized and counts 0, so it no
+    longer pushes a join with a parquet scan past the cache threshold;
+    the parquet leaf still counts its file bytes."""
+    from dask_spark.operators.graph import _scan_bytes
+
+    rdd_df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 2)]), "k bigint, v bigint")
+    assert _scan_bytes(rdd_df) == 0
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
+        .selectExpr("l_orderkey AS k")
+    assert 0 < _scan_bytes(li) < 1 << 40
+    assert _scan_bytes(li.join(rdd_df, "k")) == _scan_bytes(li)
+
+
+def test_scan_bytes_probe_failure_warns_once(monkeypatch, caplog):
+    """A failing size probe answers 0 (no cache) and logs one warning
+    on the dask_spark logger, not one per call."""
+    from dask_spark.operators import graph
+
+    class Broken:
+        @property
+        def _jdf(self):
+            raise RuntimeError("no JVM")
+
+    monkeypatch.setattr(graph, "_probe_warned", False)
+    with caplog.at_level("WARNING", logger="dask_spark"):
+        assert graph._scan_bytes(Broken()) == 0
+        assert graph._scan_bytes(Broken()) == 0
+    warned = [r for r in caplog.records if r.name == "dask_spark"]
+    assert len(warned) == 1 and "RuntimeError" in warned[0].getMessage()
+
+
 def test_stratified_cap_exact_selection(spark, tables):
     """stratified_cap keeps EXACTLY min(N_s, n) rows per group, and
     they are the n smallest (md5(id), id) keys — the deterministic

@@ -19,12 +19,21 @@ so partitioning/fetch order can never move the value), and damping is
 Spark and the DuckDB oracle's unrolled-CTE replay, with zero floating
 point anywhere.
 
-100 TB shape: the per-iteration bill is ONE shuffle join of the edge
-table with the node-keyed rank table on src (edges are pre-joined
-with out-degrees once and cached by a lazy localCheckpoint,
-partitioned by src so only the rank side exchanges; the first round
-needs no join at all, since every initial rank is a function of the
-node id) and ONE dst-keyed aggregate whose exchange is
+100 TB shape: the per-iteration bill is ONE join of the edge table
+with the node-keyed rank table on src and ONE dst-keyed aggregate.
+The edge table is built once — a single src-keyed exchange, with
+out-degrees from a src window — and cached by a lazy
+localCheckpoint. No co-partitioning survives that checkpoint under
+AQE: its LogicalRDD reports UnknownPartitioning(0)
+(hashpartitioning(src) only with AQE off), so the planner sees an
+unpartitioned edge side. At small scale (sf0.01) AQE turns every
+per-round join into a broadcast hash join of whichever side is
+smaller at run time; at scale it is a shuffle join on src. Under
+AQE a lazy checkpoint also runs its subtree's shuffle stages when it
+is CALLED, not at the first action, which is why the build is kept
+to one exchange. The first round needs no join at all, since every
+initial rank is a function of the node id. The dst-keyed
+aggregate's exchange is
 map-side combined — per-partition state is one partial sum per
 distinct dst in the partition, and celebrity in-degree skew collapses
 map-side exactly like any skewed groupBy-sum. Rank state is
@@ -40,6 +49,7 @@ import logging
 import os
 
 import pyspark.sql.functions as F
+from pyspark.sql import Window
 
 from dask_spark.frame import DaskFrame
 
@@ -163,7 +173,16 @@ def pagerank(edges, src_col: str = "src", dst_col: str = "dst",
     ``scale`` as N grows (10^8 at 10^9 nodes still keeps 8 exact
     digits).
 
-    Caching and failure: the degree-joined edge table (and, in
+    Skew: the edge table is built from one hash exchange on src, so a
+    hub src's full adjacency sits in one partition while its
+    out-degree window runs (the window buffer spills past
+    ``spark.sql.windowExec.buffer.spill.threshold`` rather than
+    failing). The degree join this replaced had the same src-keyed
+    layout, but AQE could split a skewed partition there; the window
+    cannot be split. The per-round join and the map-side-combined
+    in-sum are unaffected.
+
+    Caching and failure: the degree-annotated edge table (and, in
     directed mode, the node set) is cached by a lazy
     ``localCheckpoint``, not ``persist()``, so a call leaves no entry
     in the session's cache manager; the blocks are freed once the
@@ -192,23 +211,25 @@ def pagerank(edges, src_col: str = "src", dst_col: str = "dst",
         if weight_col is not None:
             rev.append(F.col("w"))
         e = e.unionAll(e.select(*rev))
+    # ONE edge-sized exchange, on src. hash(src) already satisfies the
+    # (src, dst) dedup / weight merge and the src-keyed degree window,
+    # so neither plans an exchange of its own and out-degrees need no
+    # join (a hub src's whole adjacency sits in one partition here; see
+    # the docstring).
+    e = e.repartition("src")
     if weight_col is not None:
         # parallel edges merge by SUMMING weight (multiplicity)
         e = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+        deg = F.sum("w")
     else:
         e = e.distinct()
-    # out-degrees ride WITH the edges (one join, once) so an iteration
-    # only has to bring the current ranks to the edge partitioning;
-    # the src-keyed join output is ALREADY hash-partitioned on src, so
-    # no explicit repartition (an extra full-edge exchange) is needed.
-    if weight_col is not None:
-        deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
-    else:
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        deg = F.count(F.lit(1))
     # ed is read once per round. A lazy localCheckpoint caches it
     # without the near-empty AQE job per reference that a persist()ed
     # relation costs (lifetime and failure: see the docstring).
-    ed = e.join(deg, "src").localCheckpoint(eager=False)
+    ed = e.withColumn(
+        "outdeg", deg.over(Window.partitionBy("src"))
+    ).localCheckpoint(eager=False)
     # directed mode needs the node set for the per-round left join
     # (nodes without in-edges still get the teleport share); in
     # symmetric mode every node has an in-edge, so the in-sum already

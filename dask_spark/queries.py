@@ -11,8 +11,10 @@ on both sides so fp addition order can't flip the value hash.
 from __future__ import annotations
 
 import math
+import weakref
 
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 from dask_spark.frame import DaskFrame, concat
 from dask_spark.functions import text as T
@@ -23,11 +25,14 @@ QUERY_VEC = [((i * 37 + 11) % 64) / 64.0 - 0.5 for i in range(64)]
 _QV_SQL = "[" + ", ".join(f"{x}::FLOAT" for x in QUERY_VEC) + "]"
 
 
-# (session, sf_dir, table) -> analyzed scan plan. DataFrames are
-# immutable lazy plans, so re-serving one skips the footer/schema job
-# spark.read.parquet runs per call — worth ~100ms of build time per
-# query against repeated tables (bench runs every query twice).
-_LOAD_CACHE: dict[tuple, object] = {}
+# session -> {(sf_dir, table): JVM Dataset of the analyzed scan}.
+# DataFrames are immutable lazy plans, so re-serving one skips the
+# footer/schema job spark.read.parquet runs per call — worth ~100ms of
+# build time per query against repeated tables (bench runs every query
+# twice). Keyed weakly so a dropped session's entries go with it; the
+# values hold the JVM handle, not the Python DataFrame, because a
+# DataFrame references its session and would keep the key alive.
+_LOAD_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load(spark, sf_dir: str, name: str) -> DaskFrame:
@@ -36,9 +41,10 @@ def load(spark, sf_dir: str, name: str) -> DaskFrame:
     from dask_spark.functions import normalize_ntz
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark, sf_dir, name)
-    if key in _LOAD_CACHE:
-        return DaskFrame(_LOAD_CACHE[key])
+    cache = _LOAD_CACHE.setdefault(spark, {})
+    key = (sf_dir, name)
+    if key in cache:
+        return DaskFrame(DataFrame(cache[key], spark))
     if name == "events":
         # events.parquet has stored TIMESTAMP(NANOS) (Spark has no ns
         # type — read as long and floor to micros) and, in newer data
@@ -52,7 +58,7 @@ def load(spark, sf_dir: str, name: str) -> DaskFrame:
         sdf = normalize_ntz(sdf)
     else:
         sdf = normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    _LOAD_CACHE[key] = sdf
+    cache[key] = sdf._jdf
     return DaskFrame(sdf)
 
 

@@ -2417,22 +2417,113 @@ def test_pagerank_leaves_no_cache_entry(spark, mode):
     assert cache.isEmpty()
 
 
-def test_pagerank_symmetric_job_count(spark):
-    """A symmetric 3-round run on a fixed small graph runs at most 10
-    Spark jobs (it was 15 when round 1 joined a persisted node table
-    and the edges were persist()-cached). Jobs are counted by job-id
-    range. The count is an upper bound because AQE varies it: most
-    runs take 9 jobs, and now and then AQE resubmits one small stage
-    as a tenth."""
-    from dask_spark.operators.graph import pagerank
-
+def _jobs_graph(spark):
     edges = [(i, (i * 7 + 3) % 40) for i in range(200)]
     edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    return spark.createDataFrame(edges, "src bigint, dst bigint")
+
+
+def test_pagerank_symmetric_job_count(spark):
+    """A symmetric 3-round run on a fixed small graph runs at most 8
+    Spark jobs. It was 15 when round 1 joined a persisted node table
+    and the edges were persist()-cached, and 9 while the degree table
+    was joined onto the deduplicated edges (three exchanges before the
+    checkpoint instead of one). Jobs are counted by job-id range. The
+    count is an upper bound because AQE varies it: most runs take 7
+    jobs, and now and then AQE resubmits one small stage as an
+    eighth."""
+    from dask_spark.operators.graph import pagerank
+
+    df = _jobs_graph(spark)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     first = dag.numTotalJobs()
     pagerank(df, iters=3, symmetric=True).to_spark().collect()
-    assert dag.numTotalJobs() - first <= 10
+    assert dag.numTotalJobs() - first <= 8
+
+
+def test_pagerank_directed_job_count(spark):
+    """Directed mode on the same graph also builds the node table:
+    at most 14 jobs (13 measured; 15 with the three-exchange edge
+    build)."""
+    from dask_spark.operators.graph import pagerank
+
+    df = _jobs_graph(spark)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    pagerank(df, iters=3).to_spark().collect()
+    assert dag.numTotalJobs() - first <= 14
+
+
+@pytest.mark.parametrize("mode", [
+    {"symmetric": True},
+    {"symmetric": True, "weight_col": "w", "seed_fn": lambda n: n % 2 == 1},
+], ids=["symmetric", "ppr"])
+def test_pagerank_build_job_count(spark, mode):
+    """Under AQE a lazy checkpoint runs its subtree's shuffle stages
+    when it is called, so building the edge table costs jobs before
+    any action. One src-keyed exchange means at most one such job
+    (three with the dedup, degree aggregate and degree join)."""
+    import pyspark.sql.functions as F
+
+    from dask_spark.operators.graph import pagerank
+
+    df = _jobs_graph(spark).withColumn("w", F.lit(1).cast("bigint"))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    pagerank(df, iters=3, **mode)
+    assert dag.numTotalJobs() - first <= 1
+
+
+@pytest.mark.parametrize("mode", [
+    {},
+    {"symmetric": True},
+    {"symmetric": True, "weight_col": "w", "seed_fn": lambda n: n % 2 == 1},
+], ids=["directed", "symmetric", "ppr"])
+def test_pagerank_shuffle_partitions_invariant(spark, mode):
+    """Ranks are identical with 1 and with 16 shuffle partitions: the
+    edge build's src exchange, the degree window and the in-sum are
+    all order-free integer arithmetic."""
+    from dask_spark.operators.graph import pagerank
+
+    edges = [(i % 37, (i * 7 + 3) % 40, 1 + i % 3) for i in range(300)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint, w bigint")
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for n in ("1", "16"):
+            spark.conf.set(key, n)
+            got.append(sorted(map(
+                tuple, pagerank(df, iters=4, **mode).to_spark().collect()
+            )))
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1]
+
+
+def test_pagerank_weighted_hub_replay(spark):
+    """A 300-leaf star with parallel edges, weighted and symmetrized:
+    every hub–leaf pair merges to weight 2, so the hub's out-degree is
+    one window summing 300 merged edges to 600, and every rank
+    matches the integer replay exactly."""
+    from collections import defaultdict
+
+    from dask_spark.operators.graph import pagerank
+
+    raw = [(0, i, 1) for i in range(1, 301)]
+    raw += [(0, i, 1) for i in range(1, 301, 2)]  # parallel edges
+    raw += [(i, 0, 1) for i in range(2, 301, 2)]  # already reversed
+    df = spark.createDataFrame(raw, "src bigint, dst bigint, w bigint")
+    got = {r["node"]: r["rank"] for r in
+           pagerank(df, iters=4, scale=10 ** 9, symmetric=True,
+                    weight_col="w").to_spark().collect()}
+    ew = defaultdict(int)
+    for a, b, w in raw:
+        ew[(a, b)] += w
+        ew[(b, a)] += w
+    nodes = {n for e in ew for n in e}
+    assert sum(w for (s, _), w in ew.items() if s == 0) == 600
+    assert got == _weighted_pagerank_py(ew, nodes, 4, 10 ** 9)
 
 
 @pytest.mark.parametrize("name", ["corpus_pagerank", "graph_ppr"])

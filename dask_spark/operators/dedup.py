@@ -9,7 +9,12 @@ The near-dup operators (MinHash-LSH, SimHash, n-gram Jaccard,
 embedding-cosine) are the 100 TB scale path for LLM corpus dedup:
 candidate generation shuffles only (bucket_key → doc ids), verification
 joins happen within buckets, and all hashing is JVM-side (xxhash64 /
-higher-order array fns) — no Python in the hot path."""
+higher-order array fns). Where Python does sit in the hot path, it is
+the one implementation of that operator, chosen by measurement: Arrow
+numpy kernels for the all-pairs embedding Gram blocks
+(embedding_pairs_exact), the within-cell SemDeDup scan
+(semantic_dedup, semantic_keep_exact) and the bloom probe count
+(contamination_bloom)."""
 
 from __future__ import annotations
 
@@ -546,36 +551,23 @@ def embedding_dedup_pairs(frame, vec_col: str = "embedding",
 
 def embedding_pairs_exact(frame, vec_col: str = "embedding",
                           id_col: str = "vec_id", threshold: float = 0.4,
-                          engine: str = "arrow", block_size: int = 2048):
+                          block_size: int = 2048):
     """EXACT all-pairs cosine above threshold — the oracle-checkable
     twin of ``embedding_dedup_pairs``. O(n²) comparisons: use only on
     small or pre-blocked sets (at 100 TB, run it per LSH bucket /
     IVF cell; the LSH variant above is the scale path). Cosine is
     rounded to 6 dp so the threshold cut is reproducible across
-    engines.
+    engines. Returns (id_a, id_b, cosine) with id_a < id_b; a zero
+    vector scores cosine 0 against everything.
 
-    engine="arrow" (default): BLOCK-PAIR Gram kernel — ids hash into
-    ~n/block_size blocks, each (bi ≤ bj) block pair computes ONE numpy
-    Va·Vbᵀ matmul instead of |a|·|b| interpreted per-pair cosines
-    (~10× at n=2000; the join shuffles B² packed rows, not n² pairs).
-    engine="expr" keeps the pure-Column nested-loop join."""
+    BLOCK-PAIR Gram kernel: ids hash into ~n/block_size blocks, each
+    (bi ≤ bj) block pair computes ONE numpy Va·Vbᵀ matmul instead of
+    |a|·|b| interpreted per-pair cosines (the join shuffles B² packed
+    rows, not n² pairs). Against the expression nested-loop join it
+    replaced: 0.68 s vs 8.28 s at sf0.01 (4 cores, median of 6)."""
     from dask_spark.frame import DaskFrame
-    from dask_spark.functions.vector import cosine_sim
 
     sdf = frame._sdf.select(id_col, vec_col)
-    if engine == "expr":
-        a, b = sdf.alias("a"), sdf.alias("b")
-        cos = F.round(
-            cosine_sim(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6
-        ).alias("cosine")
-        out = (
-            a.join(b, on=F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"), cos)
-            .filter(F.col("cosine") >= threshold)
-        )
-        return DaskFrame(out)
-
     n = sdf.count()  # driver scalar — the documented O(n²)-tool contract
     n_blocks = max(1, -(-n // block_size))
     packed = (
@@ -618,8 +610,8 @@ def embedding_pairs_exact(frame, vec_col: str = "embedding",
                         # one list on both sides: upper triangle only
                         continue
                     if ids_a[i] == ids_b[j]:
-                        # duplicate id values: the expr engine's strict
-                        # id_a < id_b join never emits (id, id) — agree
+                        # duplicate id values: pairs are strictly
+                        # id_a < id_b, so (id, id) is never emitted
                         continue
                     # order the ids (cross-block pairs meet exactly
                     # once, on whichever side the lower id landed)
@@ -1222,7 +1214,7 @@ def canonicalize(docs, pairs, id_col: str = "doc_id",
 
 def semantic_dedup(frame, vec_col: str = "embedding", id_col: str = "vec_id",
                    n_clusters: int = 16, threshold: float = 0.95,
-                   centroids=None, engine: str = "arrow"):
+                   centroids=None):
     """SemDeDup-shape semantic deduplication (Abbas et al. 2023,
     public): cluster the embedding space, then within each cluster
     drop every point whose cosine to a LOWER-id member exceeds
@@ -1241,7 +1233,6 @@ def semantic_dedup(frame, vec_col: str = "embedding", id_col: str = "vec_id",
     recall-bounded), this is exhaustive WITHIN cells and deliberately
     blind across them."""
     from dask_spark.frame import DaskFrame
-    from dask_spark.functions.vector import cosine_sim
     from dask_spark.operators.similarity import (
         assign_clusters,
         kmeans_centroids,
@@ -1252,58 +1243,35 @@ def semantic_dedup(frame, vec_col: str = "embedding", id_col: str = "vec_id",
     assigned = assign_clusters(frame, centroids, vec_col)._sdf.select(
         F.col(id_col), F.col(vec_col), F.col("cluster")
     )
-    if engine == "arrow":
-        # Vectorized within-cell kernel: applyInPandas per cluster —
-        # one Gram matmul (V·Vᵀ) and a lower-triangle scan replace
-        # m²/2 interpreted per-pair cosines (measured ~10× at m≈600;
-        # identical greedy rule, BLAS dot == the parity replay's dot)
-        def per_cell(pdf):
-            import numpy as _np
-            import pandas as _pd
+    # Vectorized within-cell kernel: applyInPandas per cluster — one
+    # Gram matmul (V·Vᵀ) and a lower-triangle scan replace m²/2
+    # interpreted per-pair cosines of a cluster-keyed self-join
+    # (1.02 s vs 2.76 s at sf0.01, 4 cores; identical greedy rule,
+    # BLAS dot == the parity replay's dot)
+    def per_cell(pdf):
+        import numpy as _np
+        import pandas as _pd
 
-            order = _np.argsort(pdf[id_col].to_numpy(), kind="stable")
-            pdf = pdf.iloc[order]
-            V = _np.asarray(
-                [_np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-            )
-            n = _np.linalg.norm(V, axis=1)
-            n[n == 0] = 1.0
-            C = (V @ V.T) / _np.outer(n, n)
-            drop = (_np.tril(C, -1) >= threshold).any(axis=1)
-            return _pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cluster": pdf["cluster"].to_numpy(),
-                    "keep": ~drop,
-                }
-            )
+        order = _np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        pdf = pdf.iloc[order]
+        V = _np.asarray(
+            [_np.asarray(v, dtype="float64") for v in pdf[vec_col]]
+        )
+        n = _np.linalg.norm(V, axis=1)
+        n[n == 0] = 1.0
+        C = (V @ V.T) / _np.outer(n, n)
+        drop = (_np.tril(C, -1) >= threshold).any(axis=1)
+        return _pd.DataFrame(
+            {
+                id_col: pdf[id_col].to_numpy(),
+                "cluster": pdf["cluster"].to_numpy(),
+                "keep": ~drop,
+            }
+        )
 
-        id_dt = dict(assigned.dtypes)[id_col]
-        out = assigned.groupBy("cluster").applyInPandas(
-            per_cell, f"{id_col} {id_dt}, cluster int, keep boolean"
-        )
-        return DaskFrame(out)
-    a = assigned.alias("a")
-    b = assigned.alias("b")
-    dup_pairs = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a." + id_col) > F.col("b." + id_col)),
-        )
-        .filter(
-            cosine_sim(F.col("a." + vec_col), F.col("b." + vec_col))
-            >= F.lit(threshold)
-        )
-        .select(F.col("a." + id_col).alias("__drop_id"))
-        .distinct()
-    )
-    out = assigned.join(
-        dup_pairs, assigned[id_col] == dup_pairs["__drop_id"], "left"
-    ).select(
-        F.col(id_col),
-        F.col("cluster"),
-        F.col("__drop_id").isNull().alias("keep"),
+    id_dt = dict(assigned.dtypes)[id_col]
+    out = assigned.groupBy("cluster").applyInPandas(
+        per_cell, f"{id_col} {id_dt}, cluster int, keep boolean"
     )
     return DaskFrame(out)
 
@@ -1674,11 +1642,12 @@ def _bloom_positions_from_pair(pair, k: int, m_bits: int):
 def _bloom_hits_udf(words: list[int], k: int, m_bits: int):
     """Vectorized bloom probe: per-row count of grams whose k
     Kirsch–Mitzenmacher positions are all set. Pure int64 numpy —
-    bit-identical to the expression engine (no floats anywhere), one
-    flat pass per Arrow batch instead of ~30 interpreted expression
-    nodes per probe (the probe filter alone was ~3.7s of the 6.0s
-    sf0.1 bench time). Closure state is the m_bits/64 signed words —
-    a few hundred bytes riding the task like any plan literal."""
+    bit-identical to the same bit-tests as Catalyst expressions (no
+    floats anywhere), one flat pass per Arrow batch instead of ~30
+    interpreted expression nodes per probe (that expression probe
+    filter alone was ~3.7s of the 6.0s sf0.1 bench time). Closure
+    state is the m_bits/64 signed words — a few hundred bytes riding
+    the task like any plan literal."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1700,7 +1669,7 @@ def _bloom_hits_udf(words: list[int], k: int, m_bits: int):
         ) | 1
         # same mod-m pre-reduction as _bloom_positions_from_pair: the
         # raw 60-bit md5 pair made j*f2 wrap int64 for k >= 9 here
-        # while the expression engine raised under ANSI mode
+        # while Catalyst arithmetic raises under ANSI mode
         f1 = f1 % mb
         f2 = f2 % mb
         hit = np.ones(total, dtype=bool)
@@ -1724,8 +1693,7 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
                         id_col: str = "doc_id", ngram: int = 3,
                         m_bits: int = 4096, k: int = 3,
                         threshold: float = 0.5,
-                        hash_kind: str = "md5",
-                        engine: str = "arrow"):
+                        hash_kind: str = "md5"):
     """Bloom-filter decontamination: like ``contamination`` but the
     benchmark gram set is compressed into a CONSTANT-SIZE bit array
     before probing. ``contamination`` broadcasts the eval grams as a
@@ -1740,10 +1708,10 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
     Scale shape (100 TB): the build is one distinct-positions job
     whose driver collect is bounded by m_bits (a few KB, never by the
     blocklist); the probe is ENTIRELY in-row — per-doc distinct grams
-    as an array, k bit-tests per gram against the literal bit words,
-    counted with one in-row filter — zero exchanges end to end, the
-    plan is scan → project. Compare: the exact path shuffles every
-    doc's grams through a groupBy(doc).
+    as an array, k bit-tests per gram against the m_bits/64 bit words,
+    counted by one scalar Arrow UDF — zero exchanges end to end, the
+    plan is scan → project → ArrowEvalPython. Compare: the exact path
+    shuffles every doc's grams through a groupBy(doc).
 
     Returns (id, total_grams, hit_grams, contaminated); hit_grams
     counts bloom-POSITIVE grams (superset of true hits). Docs with no
@@ -1755,12 +1723,13 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
     the k probe positions are Kirsch–Mitzenmacher-derived from ONE
     digest: pos_j = (h1 + j*(h2|1)) mod m.
 
-    ``engine``: "arrow" (default) counts the probes in a vectorized
-    numpy kernel over the JVM-staged (h1, h2) arrays — pure int64
-    arithmetic, bit-identical to "expr", which keeps the whole probe
-    in Catalyst expressions (k bit-tests inside an interpreted HOF
-    lambda — the text_repetition trade: ~4× slower at sf0.1 but zero
-    Python; both modes hash-match the oracle)."""
+    The probes are counted by a vectorized numpy kernel over the
+    JVM-staged (h1, h2) arrays: pure int64 arithmetic, bit-identical to
+    the same k bit-tests written as Catalyst expressions (pinned in
+    tests/test_llm_ops.py against such a reference probe). Against that
+    expression probe, run inside an interpreted HOF lambda: 2.21 s vs
+    2.76 s (md5) and 1.30 s vs 1.72 s (xxhash64) at sf0.1; at sf0.01
+    the expression probe was ~0.15 s faster (4 cores, median of 6)."""
     from fractions import Fraction
 
     from dask_spark.frame import DaskFrame
@@ -1784,35 +1753,8 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
     for r in pos_rows:
         p = int(r["p"])
         words[p // 64] |= 1 << (p % 64)
-    # two's-complement fold into signed 64-bit plan literals
+    # two's-complement fold into the kernel's signed 64-bit words
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    # ONE array literal, not F.array(64 lit children): CreateArray
-    # re-builds the array on every evaluation, and inside the
-    # interpreted probe lambda that's a fresh 64-word allocation per
-    # bit-test per gram; Literal.create is a constant
-    bitset = F.lit([int(w) for w in words])
-
-    def is_set(pos):
-        # F.get is 0-based and takes a Column index; the PySpark
-        # shiftright wrapper only takes a literal shift, so resolve
-        # the SQL function directly for the column-valued bit offset
-        word = F.get(bitset, (pos / 64).cast("int"))
-        return F.call_function(
-            "shiftright", word, pos % 64
-        ).bitwiseAND(F.lit(1)) == 1
-
-    def flagged(h1, h2):
-        # mod-m pre-reduction, same as _bloom_positions_from_pair:
-        # keeps j*h2 inside int64 for any k
-        m = F.lit(int(m_bits))
-        h1m = F.pmod(h1, m)
-        h2m = F.pmod(h2.bitwiseOR(F.lit(1)), m)
-        cond = None
-        for j in range(k):
-            test = is_set(F.pmod(h1m + j * h2m, m))
-            cond = test if cond is None else cond & test
-        return cond
-
     # Drop gram-less docs on a CHEAP text predicate BEFORE the gram
     # build. The natural filter — size(grams) > 0 AFTER staging — gets
     # predicate-pushed below the projection with the gram expression
@@ -1826,8 +1768,8 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
     live = corpus_sdf.filter(F.col(text_col).rlike(r"\S"))
     # Stage the digest per gram as ARRAY DATA (a transform's output is
     # materialized, so the digest is computed exactly once per gram —
-    # an expression reused inside the probe lambda would re-evaluate
-    # per probe: interpreted HOF eval does no subexpression reuse);
+    # an expression reused inside the h1/h2 lambdas would re-evaluate
+    # per use: interpreted HOF eval does no subexpression reuse);
     # __digs is used by BOTH h1/h2 transforms and grams by BOTH __ng
     # and __digs, and CollapseProject keeps twice-referenced non-cheap
     # projections staged.
@@ -1844,13 +1786,7 @@ def contamination_bloom(corpus, benchmark, text_col: str = "text",
     h1s = F.transform(F.col("__digs"), lambda d: _bloom_h1(d, hash_kind))
     h2s = F.transform(F.col("__digs"), lambda d: _bloom_h2(d, hash_kind))
 
-    if engine == "arrow":
-        hits = _bloom_hits_udf(words, k, m_bits)(h1s, h2s)
-    elif engine == "expr":
-        flags = F.zip_with(h1s, h2s, flagged)
-        hits = F.size(F.filter(flags, lambda b: b))
-    else:
-        raise ValueError("engine must be arrow|expr")
+    hits = _bloom_hits_udf(words, k, m_bits)(h1s, h2s)
     per_doc = staged.select(
         id_col,
         F.col("__ng").alias("total_grams"),

@@ -140,6 +140,33 @@ def _persist_if_big(sdf):
 # edge set is cached, both union branches read the cache.
 
 
+def _canonical_edges(sdf, a_col: str, b_col: str):
+    """The undirected edge set as distinct (a, b) bigint pairs with
+    a < b: each edge canonicalized to (least, greatest), self-loops
+    and duplicates dropped."""
+    return sdf.select(
+        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
+        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
+    ).filter(F.col("a") < F.col("b")).distinct()
+
+
+def _adjacency(e):
+    """Both orientations (u, v) of every canonical edge (a, b)."""
+    return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+
+
+def _degrees(e, node: str = "n", deg: str = "d"):
+    """(node, deg) bigint degree of every endpoint of the canonical
+    edge set ``e`` — one node-keyed, map-side-combined count."""
+    return (
+        e.select(F.col("a").alias(node))
+        .unionAll(e.select(F.col("b").alias(node)))
+        .groupBy(node).agg(F.count(F.lit(1)).cast("bigint").alias(deg))
+    )
+
+
 def pagerank(edges, src_col: str = "src", dst_col: str = "dst",
              iters: int = 3, scale: int = 10 ** 12,
              damping_num: int = 85, damping_den: int = 100,
@@ -311,18 +338,8 @@ def triangle_count(edges, a_col: str = "a", b_col: str = "b",
     whose fan-out is 5, caches it BEFORE passing it in (a 10×-SF win,
     31.9s → 17.1s))."""
     sdf = edges._sdf if isinstance(edges, DaskFrame) else edges
-    if assume_canonical:
-        e = sdf
-    else:
-        e = sdf.select(
-            F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-        ).filter(F.col("a") < F.col("b")).distinct()
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = sdf if assume_canonical else _canonical_edges(sdf, a_col, b_col)
+    deg = _degrees(e)
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     ed = e.join(da, "a").join(db, "b")
@@ -364,16 +381,9 @@ def clustering_coefficient(edges, a_col: str = "a", b_col: str = "b",
     canonical edge set pre-canonicalized (r15) so its re-dedup
     distinct exchange drops out of the plan."""
     sdf = edges._sdf if isinstance(edges, DaskFrame) else edges
-    e = sdf.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-    ).filter(F.col("a") < F.col("b")).distinct()
+    e = _canonical_edges(sdf, a_col, b_col)
     e = _persist_if_big(e)  # 5 scans: deg's 2 + triangle_count's 3
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    )
+    deg = _degrees(e, "node", "deg")
     tri = triangle_count(e, "a", "b", assume_canonical=True)._sdf
     out = deg.join(tri, "node", "left").select(
         "node", "deg",
@@ -410,13 +420,8 @@ def k_core(edges, k: int, a_col: str = "a", b_col: str = "b",
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     sdf = edges._sdf if isinstance(edges, DaskFrame) else edges
-    e = sdf.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-    ).filter(F.col("a") < F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=False)
+    e = _canonical_edges(sdf, a_col, b_col)
+    adj = _adjacency(e).localCheckpoint(eager=False)
 
     def degs(a):
         return a.groupBy("u").agg(
@@ -477,10 +482,7 @@ def modularity(edges, communities, a_col: str = "a", b_col: str = "b",
     esdf = edges._sdf if isinstance(edges, DaskFrame) else edges
     csdf = (communities._sdf if isinstance(communities, DaskFrame)
             else communities)
-    e = esdf.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-    ).filter(F.col("a") < F.col("b")).distinct()
+    e = _canonical_edges(esdf, a_col, b_col)
     e = _persist_if_big(e)  # consumed by m_agg, tagged, and deg
     cmap = csdf.select(
         F.col(node_col).cast("bigint").alias("n"),
@@ -499,11 +501,7 @@ def modularity(edges, communities, a_col: str = "a", b_col: str = "b",
         .groupBy(F.col("ca").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("internal_edges"))
     )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    deg = _degrees(e)
     per_com = (
         cmap.join(deg, "n", "left")
         .groupBy(F.col("c").alias("community"))
@@ -556,18 +554,11 @@ def jaccard_similarity(edges, a_col: str = "a", b_col: str = "b",
     full graph either way; all counts exact int64, jaccard one pinned
     division rounded on both engines."""
     sdf = edges._sdf if isinstance(edges, DaskFrame) else edges
-    e = sdf.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-    ).filter(F.col("a") < F.col("b")).distinct()
+    e = _canonical_edges(sdf, a_col, b_col)
     # the adjacency — read by deg and BOTH wedge sides — caches
     # size-adaptively (see _persist_if_big; blanket persist was the
     # r15 toy-SF loss, zero caching was the 100 TB loss)
-    adj = _persist_if_big(
-        e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    adj = _persist_if_big(_adjacency(e))
     deg = adj.groupBy(F.col("u").alias("n")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -634,13 +625,8 @@ def bfs_hops(edges, source, a_col: str = "a", b_col: str = "b",
             "qualifying edges)"
         )
     sdf = edges._sdf if isinstance(edges, DaskFrame) else edges
-    e = sdf.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
-    ).filter(F.col("a") < F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=False)
+    e = _canonical_edges(sdf, a_col, b_col)
+    adj = _adjacency(e).localCheckpoint(eager=False)
     spark = sdf.sparkSession
     visited = spark.createDataFrame(
         [(int(source), 0)], "node bigint, dist int"

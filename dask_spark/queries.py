@@ -2318,18 +2318,16 @@ def text_repetition(spark, sf_dir):
     """Gopher-style repetition filters (duplicate-word fraction, most-
     frequent-2-gram coverage, longest identical-token run) — the
     in-document repetition signals a corpus pipeline thresholds on
-    before training. Map-only at 100 TB either way; the registry runs
-    the Counter-based Arrow kernel (O(k) per doc, measured 3.8× the
-    staged-HOF expression engine at sf0.1 — it was the priciest
-    map-only bench query, SURVEY §7's trigger), which emits raw
-    values and leaves the 6-dp rounding JVM-side so both engines hash
-    identically (parity pinned in tests/test_llm_ops.py). Extends the
-    reference's accessor surface (dask/dataframe/accessor.py) the same
-    way quality_score does."""
+    before training. Map-only at 100 TB: one Counter-based Arrow
+    kernel (O(k) per doc; it replaced a staged-HOF expression chain
+    that was the priciest map-only bench query, SURVEY §7's trigger)
+    emits raw values and leaves the 6-dp rounding JVM-side, so it
+    hashes identically to the single-Column repetition_stats (parity
+    pinned in tests/test_llm_ops.py). Extends the reference's accessor
+    surface (dask/dataframe/accessor.py) the same way quality_score
+    does."""
     d = load(spark, sf_dir, "documents").to_spark()
-    return T.with_repetition_stats(
-        d.select("doc_id", "text"), engine="arrow"
-    ).drop("text")
+    return T.with_repetition_stats(d.select("doc_id", "text")).drop("text")
 
 
 @q(
@@ -10620,7 +10618,8 @@ def contamination_bloom_q(spark, sf_dir):
     bench query); production mode hash_kind="xxhash64" drops the
     digest entirely. The oracle replays the positions as a
     set-membership join — bit-for-bit the same flags, INCLUDING
-    the filter's false positives."""
+    the filter's false positives. One Arrow kernel counts the probe
+    hits per doc."""
     from dask_spark.operators.dedup import contamination_bloom
 
     d = load(spark, sf_dir, "documents")
@@ -11496,177 +11495,6 @@ def drift_psi_multi(spark, sf_dir):
     ).to_spark()
 
 
-# ---- registry ordering --------------------------------------------------
-# The driver's correctness gate samples queries in dict order; r1+r2
-# each covered 50 entries. Float every query WITHOUT a driver-side
-# correctness row yet (including anything newly registered above) to
-# the front so each entry earns one across rounds; driver-green queries
-# keep their relative order at the back.
-_R2_DRIVER_COVERED = [
-    "explode", "get_dummies", "bag_json_frequencies", "text_tokens",
-    "text_quality", "text_langid", "text_fingerprint", "dedup_exact",
-    "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard", "dedup_embed",
-    "dedup_embed_lsh", "vec_norm", "vec_cosine", "vec_elementwise",
-    "ann_bruteforce", "ann_lsh", "ann_ivf", "sessionize",
-    "stream_window_batch", "io_csv_roundtrip", "io_json_roundtrip",
-    "io_orc_roundtrip", "io_from_pandas", "io_timeseries",
-    "io_parquet_pushdown", "multimodal_meta", "ffill", "pct_change",
-    "cummax", "case_when", "mode", "moments", "autocorr", "combine_first",
-    "groupby_prod", "any_all", "histogram", "vec_argmax", "map_overlap",
-    "bag_topk_words", "join_q10_returns", "join_q7_nation_volume",
-    "categorize", "value_counts_norm", "ann_batch", "vec_axis0_stats",
-    "join_q18_big_orders", "groupby_topk",
-]
-_R1_DRIVER_COVERED = [
-    "groupby_agg",
-    "filter_pushdown",
-    "groupby_named_agg",
-    "groupby_nunique",
-    "groupby_quantile",
-    "groupby_having",
-    "reduce_global",
-    "reduce_nunique",
-    "reduce_nunique_approx",
-    "reduce_quantile",
-    "describe",
-    "value_counts",
-    "idx_minmax",
-    "corr_cov",
-    "join_inner",
-    "join_broadcast",
-    "join_semi",
-    "join_anti",
-    "join_left",
-    "join_outer",
-    "join_cross",
-    "concat_union",
-    "merge_asof",
-    "elem_project_arith",
-    "elem_where_mask",
-    "na_handling",
-    "na_dropna",
-    "elem_astype",
-    "filter_isin",
-    "str_ops",
-    "dt_ops",
-    "elem_math",
-    "elem_map_pandas_udf",
-    "map_partitions",
-    "sort_values",
-    "topk",
-    "drop_duplicates",
-    "drop_duplicates_keep_first",
-    "set_index",
-    "sample_head",
-    "cumsum",
-    "shift_diff",
-    "rolling_rows",
-    "rolling_range",
-    "resample",
-    "groupby_transform",
-    "groupby_apply",
-    "groupby_cumcount",
-    "pivot_table",
-    "melt"
-]
-# queries the r4 driver window hash-checked (CORRECTNESS_r04.json)
-_R4_DRIVER_COVERED = [
-    "range_join", "corpus_pipeline", "window_rank", "arr_slice",
-    "arr_stack_mean", "arr_random_hist", "groupby_custom_agg",
-    "corr_matrix", "monotonic", "arr_tsqr", "arr_map_blocks",
-    "join_q14_promo", "join_q15_top_supplier", "join_q19_disjunctive",
-    "join_q22_idle_customers", "multimodal_framesample",
-    "multimodal_decode", "keyless_diff", "keyless_cumsum",
-    "keyless_ffill", "dedup_clusters", "ann_knn_join", "corpus_mix",
-]
-# Round-5 RE-CHECK set, floated to the very front of the sample window:
-# the three r4-broken-now-fixed event-time queries, queries whose
-# implementation changed this round (rolling_cov demeaning,
-# contamination gram path, set_index's new oracle), everything newly
-# registered in round 5, and the r4-tail additions no driver window has
-# seen yet.
-_R5_FRONT = [
-    # md5-portable modes added late in round 5: these three were driver-
-    # covered as rows-only/old-impl — re-earn a hash-check row first
-    "dedup_minhash", "dedup_simhash", "io_timeseries",
-    "sessionize", "stream_window_batch", "merge_asof",
-    "rolling_cov", "contamination", "set_index",
-    "merge_asof_nearest", "groupby_nth", "groupby_ngroup",
-    "text_pii_scrub", "text_chunks", "arr_fft", "dedup_clusters_star",
-    "rolling_quantile", "rolling_skew", "rolling_kurt", "rolling_median",
-    "rolling_corr", "cat_codes", "arr_cholesky", "ann_lsh",
-    "dedup_embed_lsh", "ann_knn_join",
-]
-# queries the r5 driver window hash-checked (CORRECTNESS_r05.json —
-# every row except ann_knn_join's hash-fail)
-_R5_DRIVER_COVERED = [
-    "dedup_minhash", "dedup_simhash", "io_timeseries", "sessionize",
-    "stream_window_batch", "merge_asof", "rolling_cov", "contamination",
-    "set_index", "merge_asof_nearest", "groupby_nth", "groupby_ngroup",
-    "text_pii_scrub", "text_chunks", "arr_fft", "dedup_clusters_star",
-    "rolling_quantile", "rolling_skew", "rolling_kurt", "rolling_median",
-    "rolling_corr", "cat_codes", "arr_cholesky", "dedup_embed_lsh",
-    "sample_hash_deterministic", "bm25_topk", "dedup_canonicalize",
-    "corpus_shard", "corpus_mix_temperature", "text_entropy",
-    "arr_percentile", "loc_label_range", "concat_axis1",
-    "corpus_weighted_sample", "text_bigrams", "groupby_rolling",
-    "dedup_semantic", "text_classifier", "arr_nd_transpose_sum",
-    "arr_nd_matmul", "arr_nd_axis0_mean", "arr_digitize_bincount",
-    "arr_histogram2d",
-]
-# Round-6 RE-CHECK set, floated to the very front of the sample window:
-# the r5 hash-fail (now decimal-stable), every query whose engine
-# changed this round (arrow repetition kernel, the xor-shift counter
-# mix, the double-cast dot/norm paths), and everything newly
-# registered in round 6.
-_R6_FRONT = [
-    "ann_knn_join",            # the one red r5 row — fixed at 4dp
-    "text_repetition",         # arrow engine now drives the registry
-    "arr_random_hist",         # new xor-shift mix
-    "arr_random_uniform", "arr_random_poisson", "arr_random_choice",
-    "arr_random_permutation",  # new da.random family
-    "arr_einsum", "arr_ma_stats",            # new operators
-    "arr_lu", "arr_solve_triangular", "arr_svd_compressed",  # rows-only
-    # generic dot/norm now cast to double before multiplying:
-    "vec_cosine", "vec_norm", "ann_bruteforce", "ann_lsh", "ann_ivf",
-    "ann_batch", "dedup_embed", "dedup_embed_lsh",
-    # round-6 late registrations (no driver row yet):
-    "text_span_dedup", "contamination_bloom", "embed_quantize",
-]
-_DRIVER_COVERED = [
-    n
-    for n in (_R2_DRIVER_COVERED + _R1_DRIVER_COVERED
-              + _R4_DRIVER_COVERED + _R5_FRONT + _R5_DRIVER_COVERED)
-    if n not in set(_R6_FRONT)
-]
-_seen = set()
-_DRIVER_COVERED = [
-    n for n in _DRIVER_COVERED if not (n in _seen or _seen.add(n))
-]
-REGISTRY = {
-    **{n: REGISTRY[n] for n in _R6_FRONT if n in REGISTRY},
-    **{
-        n: REGISTRY[n]
-        for n in REGISTRY
-        if n not in set(_DRIVER_COVERED) and n not in set(_R6_FRONT)
-    },
-    **{n: REGISTRY[n] for n in _DRIVER_COVERED if n in REGISTRY},
-}
-
-
-# Round-12 sample-window priority: the r1-r11 driver-union left 60
-# registered queries without a correctness row (the r10/r11 additions
-# outgrew the 50-query window while the stale _R6_FRONT float kept
-# eating slots). Float exactly those 60 + the three new r12 binned
-# modes + value_counts_norm (its normalize path moved off the
-# unpartitioned window this round) to the very front; everything
-# driver-green keeps its relative order behind them.
-_R12_FRONT = ['drift_psi_multi', 'ml_auc_by_group', 'warehouse_skew_report', 'dt_timedelta_parts', 'dt_isocalendar', 'dt_round', 'ml_calibration', 'ml_ece', 'dt_tz_ops', 'ml_auc_binned', 'corr_spearman_binned', 'reduce_gini_binned', 'drift_ks_binned', 'value_counts_norm', 'text_readability', 'multimodal_phash', 'corpus_negatives', 'embed_pair_hist', 'corpus_concentration', 'drift_benford', 'reduce_gini', 'ab_proportion', 'ml_mutual_info', 'drift_psi', 'drift_ks', 'drift_chi2', 'events_cusum', 'events_hourly_profile', 'events_error_rate', 'events_ewma', 'events_attribution', 'events_anomaly', 'events_theilsen', 'scd2_history', 'cdc_apply', 'join_salted', 'groupby_nunique_skewsafe', 'incremental_agg', 'events_trend', 'events_top_paths', 'events_stickiness', 'events_rolling_wau', 'events_time_to_convert', 'events_transitions', 'assoc_rules', 'assoc_triples', 'graph_triangles', 'graph_modularity', 'graph_jaccard', 'graph_bfs', 'graph_kcore', 'graph_clustering', 'text_trigram_perplexity', 'events_session_stats', 'corpus_diff', 'dedup_cluster_sizes', 'dedup_fuzzy_name', 'corpus_split', 'ml_quantile_bucket', 'dedup_incremental', 'text_pmi_bigrams', 'classifier_nb', 'arr_unique_counts', 'ann_pq', 'ann_ivfpq', 'embed_pca', 'dedup_substring', 'dedup_substring_keep1', 'text_bpe_pairs', 'text_bpe_merges', 'text_bpe_encode', 'text_cms_boilerplate', 'text_cms_heavy', 'embed_jl']
-REGISTRY = {
-    **{n: REGISTRY[n] for n in _R12_FRONT if n in REGISTRY},
-    **{n: REGISTRY[n] for n in REGISTRY if n not in set(_R12_FRONT)},
-}
-
 @q(
     "reduce_rowwise",
     """
@@ -11738,80 +11566,16 @@ def reduce_rowwise(spark, sf_dir):
     )
 
 
-# Round-13 sample-window priority: CORRECTNESS_r12 hash-passed exactly
-# the first 50 of _R12_FRONT, leaving 24 registered queries (positions
-# 51-74: the r9-r11 additions) still without a driver correctness row.
-# Float exactly those 24 to the very front so one more window closes
-# the driver-union gap (272/296 -> 296/296); everything driver-green
-# keeps its relative order behind them. New r13 registrations are
-# appended to this list at registration time.
-_R13_FRONT = [
-    'graph_kcore', 'graph_clustering', 'text_trigram_perplexity',
-    'events_session_stats', 'corpus_diff', 'dedup_cluster_sizes',
-    'dedup_fuzzy_name', 'corpus_split', 'ml_quantile_bucket',
-    'dedup_incremental', 'text_pmi_bigrams', 'classifier_nb',
-    'arr_unique_counts', 'ann_pq', 'ann_ivfpq', 'embed_pca',
-    'dedup_substring', 'dedup_substring_keep1', 'text_bpe_pairs',
-    'text_bpe_merges', 'text_bpe_encode', 'text_cms_boilerplate',
-    'text_cms_heavy', 'embed_jl',
-    # r13 registrations (never windowed yet):
-    'reduce_rowwise',
-]
-REGISTRY = {
-    **{n: REGISTRY[n] for n in _R13_FRONT if n in REGISTRY},
-    **{n: REGISTRY[n] for n in REGISTRY if n not in set(_R13_FRONT)},
-}
-
-
-# Round-14 sample-window priority: the driver union closed at r13
-# (283/283 oracled queries hash-passed at least once; 14 rows-only by
-# design). Two changes for r14 windows (r13 verdict item 7):
-# 1. the 14 rows-only queries move to the very BACK of the registry so
-#    windows stay maximally hash-dense (r13 spent 3 slots recording
-#    `no_oracle`);
-# 2. with no never-covered queries left, the front now REFRESHES the
-#    stalest evidence: the 46 queries whose only hash-pass is from r1
-#    plus the 4 oldest r2 entries — a 50-query window re-validates the
-#    core relational surface (joins/groupby/reductions/windows) on the
-#    current tree, which has since gained tz metadata, _derive routing
-#    and the r14 ADVICE fixes.
-_R14_ROWS_ONLY = [
-    'embed_pca', 'text_bpe_merges', 'text_bpe_encode', 'arr_lu',
-    'arr_solve_triangular', 'arr_svd_compressed', 'ann_ivf',
-    'arr_random_gamma', 'reduce_nunique_approx', 'sample_head',
-    'arr_tsqr', 'multimodal_decode', 'arr_cholesky', 'dedup_semantic',
-]
-_R14_FRONT = [
-    'concat_union', 'corr_cov', 'cumsum', 'describe', 'drop_duplicates',
-    'drop_duplicates_keep_first', 'dt_ops', 'elem_astype',
-    'elem_map_pandas_udf', 'elem_math', 'elem_project_arith',
-    'elem_where_mask', 'filter_isin', 'filter_pushdown', 'groupby_agg',
-    'groupby_apply', 'groupby_cumcount', 'groupby_having',
-    'groupby_named_agg', 'groupby_nunique', 'groupby_quantile',
-    'groupby_transform', 'idx_minmax', 'join_anti', 'join_broadcast',
-    'join_cross', 'join_inner', 'join_left', 'join_outer', 'join_semi',
-    'map_partitions', 'melt', 'na_dropna', 'na_handling', 'pivot_table',
-    'reduce_global', 'reduce_nunique', 'reduce_quantile', 'resample',
-    'rolling_range', 'rolling_rows', 'shift_diff', 'sort_values',
-    'str_ops', 'topk', 'value_counts', 'any_all', 'autocorr',
-    'bag_topk_words', 'case_when',
-]
-REGISTRY = {
-    **{n: REGISTRY[n] for n in _R14_FRONT if n in REGISTRY},
-    **{n: REGISTRY[n] for n in REGISTRY
-       if n not in set(_R14_FRONT) and n not in set(_R14_ROWS_ONLY)},
-    **{n: REGISTRY[n] for n in _R14_ROWS_ONLY if n in REGISTRY},
-}
-
-# ---- r15 window rotation: stalest-driver-evidence-first ---------------
-# The r14 window hash-passed all 50 of its slots, leaving the stalest
-# driver hash evidence at r2 (18 queries) and r4 (19). _R15_FRONT is
-# the 50 oracled queries ordered by last-hash-pass round ascending
-# (r2 tranche, r4 tranche, then the first 13 of the r5 tranche),
-# computed from CORRECTNESS_r01–r14.json. All were re-verified in the
-# full local oracle sweep; this float only refreshes DRIVER evidence.
-# Rows-only queries stay at the registry back as in r14.
-_R15_FRONT = [
+# ---- registry ordering --------------------------------------------------
+# The external correctness gate (__spark_entry__'s queries() checked
+# against oracle_sql()) samples queries in dict order, 50 at a time.
+# _WINDOW_FRONT is that 50-query window: the oracled queries whose last
+# recorded hash-pass was oldest (computed from CORRECTNESS_r01–r14), so
+# one window refreshes the stalest evidence. Every other oracled
+# query follows in registration order, and the rows-only queries (no
+# oracle_sql, nothing to hash-check) go last so they never take a
+# window slot.
+_WINDOW_FRONT = [
     'categorize', 'combine_first', 'cummax', 'ffill', 'groupby_prod',
     'groupby_topk', 'histogram', 'io_parquet_pushdown',
     'join_q10_returns', 'join_q18_big_orders', 'join_q7_nation_volume',
@@ -11828,9 +11592,15 @@ _R15_FRONT = [
     'concat_axis1', 'contamination', 'corpus_mix_temperature',
     'corpus_shard',
 ]
+_ROWS_ONLY = [
+    'embed_pca', 'text_bpe_merges', 'text_bpe_encode', 'arr_lu',
+    'arr_solve_triangular', 'arr_svd_compressed', 'ann_ivf',
+    'arr_random_gamma', 'reduce_nunique_approx', 'sample_head',
+    'arr_tsqr', 'multimodal_decode', 'arr_cholesky', 'dedup_semantic',
+]
 REGISTRY = {
-    **{n: REGISTRY[n] for n in _R15_FRONT if n in REGISTRY},
-    **{n: REGISTRY[n] for n in REGISTRY
-       if n not in set(_R15_FRONT) and n not in set(_R14_ROWS_ONLY)},
-    **{n: REGISTRY[n] for n in _R14_ROWS_ONLY if n in REGISTRY},
+    **{n: REGISTRY[n] for n in _WINDOW_FRONT},
+    **{n: v for n, v in REGISTRY.items()
+       if n not in _WINDOW_FRONT and n not in _ROWS_ONLY},
+    **{n: REGISTRY[n] for n in _ROWS_ONLY},
 }

@@ -4,7 +4,8 @@ The bloom-filter probe (operators/dedup.contamination_bloom) is a
 stateless scan→project plan — zero exchanges, zero aggregation state —
 so it runs unchanged under Structured Streaming: build the constant
 m_bits bitset ONCE from the static benchmark (a batch action), then
-every microbatch probes map-only. This is the shape a production
+every microbatch probes map-only through the same Arrow probe kernel
+as the batch operator — one implementation for both. This is the shape a production
 ingest pipeline wants: the blocklist is a broadcast-sized literal baked
 into the streaming plan; no state store, no watermark, exactly the
 batch semantics per row (stream/batch EXACTNESS pinned in
@@ -17,8 +18,7 @@ def decontaminate_stream(stream_sdf, benchmark, text_col: str = "text",
                          id_col: str = "doc_id", ngram: int = 3,
                          m_bits: int = 4096, k: int = 3,
                          threshold: float = 0.5,
-                         hash_kind: str = "md5",
-                         engine: str = "arrow"):
+                         hash_kind: str = "md5"):
     """Apply bloom decontamination to a streaming corpus. ``benchmark``
     is a static DaskFrame/DataFrame (the eval blocklist); returns a
     streaming DataFrame of (id, total_grams, hit_grams, contaminated)
@@ -32,7 +32,7 @@ def decontaminate_stream(stream_sdf, benchmark, text_col: str = "text",
     return contamination_bloom(
         stream_sdf, benchmark, text_col=text_col, id_col=id_col,
         ngram=ngram, m_bits=m_bits, k=k, threshold=threshold,
-        hash_kind=hash_kind, engine=engine,
+        hash_kind=hash_kind,
     )._sdf
 
 

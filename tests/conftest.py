@@ -62,7 +62,8 @@ from dask_spark.testing import assert_eq  # noqa: E402,F401
 # ---- smoke lane (r15): `pytest -m smoke` = fast representative slice
 # for iteration (~3 min of the full ~25 min gate). The FULL suite
 # stays the round gate; smoke is file-granular so the slice tracks
-# new tests in these modules automatically.
+# new tests in these modules automatically, plus single tests marked
+# @pytest.mark.smoke elsewhere (the Arrow-kernel parity pins).
 _SMOKE_FILES = {
     "test_frame.py", "test_reductions_groupby.py", "test_joins.py",
     "test_dt_tz.py", "test_advice_r14.py", "test_advice_r15.py",

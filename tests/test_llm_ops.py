@@ -111,6 +111,56 @@ def test_embedding_dedup(vectors):
     assert ("v0", "v1") in got
 
 
+@pytest.mark.smoke
+def test_embedding_pairs_exact_matches_brute_force(spark):
+    """embedding_pairs_exact's block-pair Gram kernel, split over many
+    blocks (block_size=3), must emit exactly the pairs of a numpy
+    brute-force replay over every pair of rows with id_a < id_b and
+    cosine rounded to 6 dp: a duplicated id never pairs with itself
+    but pairs with every other row once per copy, a zero vector
+    scores 0, and a pair exactly at the threshold is kept."""
+    import dask_spark as ds
+    from dask_spark.operators.dedup import embedding_pairs_exact
+
+    rng = np.random.RandomState(11)
+    V = rng.randn(12, 4)
+    V[1] = V[0] * 2.0 + 1e-4          # near-duplicate of row 0
+    V[2] = [0.0, 0.0, 0.0, 0.0]       # zero vector
+    V[3] = [1.0, 0.0, 0.0, 0.0]
+    V[4] = [0.6, 0.8, 0.0, 0.0]       # cosine(3, 4) == 0.6 exactly
+    V[6] = V[5] + 1e-3                # near-duplicate of row 5
+    ids = list(range(100, 112))
+    ids[7] = ids[5]                   # duplicated id (row 7 copies 5's id)
+    V[7] = V[5] * 3.0                 # ... with a parallel vector
+    threshold = 0.6
+    pdf = pd.DataFrame({"vec_id": ids, "embedding": [v.tolist() for v in V]})
+    out = embedding_pairs_exact(
+        ds.from_pandas(pdf), threshold=threshold, block_size=3
+    ).compute()
+
+    norms = np.linalg.norm(V, axis=1)
+    norms[norms == 0] = 1.0
+    want = []
+    for i in range(len(ids)):
+        for j in range(len(ids)):
+            if ids[i] >= ids[j]:
+                continue
+            cos = float(np.round(V[i] @ V[j] / (norms[i] * norms[j]), 6))
+            if cos >= threshold:
+                want.append((ids[i], ids[j], cos))
+    got = sorted(
+        (int(a), int(b), float(c))
+        for a, b, c in out[["id_a", "id_b", "cosine"]].values
+    )
+    assert got == sorted(want)
+    assert (103, 104, 0.6) in got
+    assert (100, 101, 1.0) in got
+    # id 105 twice: (105, 106) once per copy, (105, 105) never
+    assert sum(p[:2] == (105, 106) for p in got) == 2
+    assert not any(a == b for a, b, _ in got)
+    assert not any(102 in (a, b) for a, b, _ in got)
+
+
 def test_ann_bruteforce_matches_numpy(vectors):
     from dask_spark.operators.similarity import brute_force_topk
 
@@ -1019,13 +1069,15 @@ def test_embedding_lsh_planted_pair_recall(spark):
     assert len(got - want) == 0  # exact verify: no false pairs
 
 
+@pytest.mark.smoke
 def test_repetition_engines_agree_exactly(spark, tables):
-    """The Arrow Counter kernel and the staged-HOF expression engine
-    must emit IDENTICAL repetition stats (the kernel returns raw
-    values; rounding stays JVM-side) — including ties (min gram ==
-    lexicographically first sorted gram) and null/empty/whitespace
-    text."""
+    """with_repetition_stats' Arrow Counter kernel must emit IDENTICAL
+    repetition stats to the single-Column repetition_stats expression
+    chain (the kernel returns raw values; rounding stays JVM-side) —
+    including ties (min gram == lexicographically first sorted gram)
+    and null/empty/whitespace text."""
     import pandas as pd
+    import pyspark.sql.functions as F
 
     import dask_spark.functions.text as T
 
@@ -1051,10 +1103,11 @@ def test_repetition_engines_agree_exactly(spark, tables):
     })
     pdf["doc_id"] = list(range(len(pdf)))
     sdf = spark.createDataFrame(pdf)
-    a = (T.with_repetition_stats(sdf, engine="expr")
+    a = (sdf.withColumn("r", T.repetition_stats(F.col("text")))
+         .select("doc_id", "r.*").orderBy("doc_id").toPandas())
+    b = (T.with_repetition_stats(sdf)
          .drop("text").orderBy("doc_id").toPandas())
-    b = (T.with_repetition_stats(sdf, engine="arrow")
-         .drop("text").orderBy("doc_id").toPandas())
+    assert list(a.columns) == list(b.columns)
     for c in a.columns:
         av, bv = a[c], b[c]
         if av.dtype == object:
@@ -1599,13 +1652,49 @@ def test_quantize_int8_roundtrip(spark):
     assert out.loc[20, "scale"] == 1.0 and not np.any(out.loc[20, "q"])
 
 
-def test_bloom_engine_and_hash_modes(spark, corpus):
-    """The Arrow probe kernel is bit-identical to the expression
-    engine (pure int64 arithmetic on both sides), in both hash modes;
-    xxhash64 keeps the one-sided-error contract; bad args raise."""
-    import pytest
+def _expr_bloom_hits(words, k, m_bits):
+    """Reference bloom probe for contamination_bloom: the same k
+    Kirsch–Mitzenmacher bit-tests per gram as Catalyst expressions
+    over ONE array literal of the signed bit words, counted with an
+    in-row filter. Same call shape as dedup._bloom_hits_udf."""
+    import pyspark.sql.functions as F
 
+    bitset = F.lit([int(w) for w in words])
+    m = F.lit(int(m_bits))
+
+    def is_set(pos):
+        # F.get is 0-based and takes a Column index; the PySpark
+        # shiftright wrapper only takes a literal shift, so resolve
+        # the SQL function directly for the column-valued bit offset
+        word = F.get(bitset, (pos / 64).cast("int"))
+        return F.call_function(
+            "shiftright", word, pos % 64
+        ).bitwiseAND(F.lit(1)) == 1
+
+    def flagged(h1, h2):
+        # mod-m pre-reduction keeps j*h2 inside int64 for any k
+        h1m = F.pmod(h1, m)
+        h2m = F.pmod(h2.bitwiseOR(F.lit(1)), m)
+        cond = None
+        for j in range(k):
+            test = is_set(F.pmod(h1m + j * h2m, m))
+            cond = test if cond is None else cond & test
+        return cond
+
+    def hits(h1s, h2s):
+        return F.size(F.filter(F.zip_with(h1s, h2s, flagged), lambda b: b))
+
+    return hits
+
+
+@pytest.mark.smoke
+def test_bloom_engine_and_hash_modes(spark, corpus, monkeypatch):
+    """The Arrow probe kernel is bit-identical to a Catalyst-expression
+    reference probe (pure int64 arithmetic on both sides), in both
+    hash modes; xxhash64 keeps the one-sided-error contract; a bad
+    hash_kind raises."""
     import dask_spark as ds
+    from dask_spark.operators import dedup
     from dask_spark.operators.dedup import contamination, contamination_bloom
 
     bench = ds.from_pandas(
@@ -1619,9 +1708,12 @@ def test_bloom_engine_and_hash_modes(spark, corpus):
             .compute().sort_values("doc_id").reset_index(drop=True)
         )
 
-    assert run(engine="arrow").equals(run(engine="expr"))
-    ax = run(hash_kind="xxhash64", engine="arrow")
-    assert ax.equals(run(hash_kind="xxhash64", engine="expr"))
+    am, ax = run(), run(hash_kind="xxhash64")
+    assert am["hit_grams"].sum() > 0 and ax["hit_grams"].sum() > 0
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_bloom_hits_udf", _expr_bloom_hits)
+        assert am.equals(run())
+        assert ax.equals(run(hash_kind="xxhash64"))
     # superset-of-exact also holds under the production hash
     exact = (
         contamination(corpus, bench, ngram=3)
@@ -1633,8 +1725,6 @@ def test_bloom_engine_and_hash_modes(spark, corpus):
         assert axi.loc[d, "hit_grams"] >= exact.loc[d, "hit_grams"]
     with pytest.raises(ValueError, match="hash_kind"):
         run(hash_kind="sha1")
-    with pytest.raises(ValueError, match="engine"):
-        run(engine="rdd")
 
 
 def test_contamination_minhash(corpus):

@@ -40,3 +40,19 @@ def test_load_cache_drops_dead_session(spark, sf_dir):
     gc.collect()
     assert ref() is None
     assert len(queries._LOAD_CACHE) == n - 1
+
+
+def test_registry_order():
+    """Every registered query appears exactly once, in one ordering:
+    the 50-query correctness window first, the rows-only queries (the
+    ones without an oracle) last."""
+    from dask_spark import queries
+
+    names = list(queries.REGISTRY)
+    assert len(names) == len(set(names)) == 297
+    front, rows_only = queries._WINDOW_FRONT, queries._ROWS_ONLY
+    assert len(front) == len(set(front)) == 50
+    assert names[:50] == front
+    assert names[-len(rows_only):] == rows_only
+    assert {n for n, (_, sql) in queries.REGISTRY.items() if sql is None} \
+        == set(rows_only)

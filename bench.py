@@ -6,8 +6,13 @@ Prints TWO JSON lines: a detailed per-query line first, then a compact
 LAST (the driver tails stdout and parses the final line; the detailed
 line outgrew its capture window at 120+ queries — BENCH_r11 parsed
 null). `value` = total wall seconds across headline queries (each fully
-executed via a row-count + all-column xxhash64 checksum aggregate, so
-Catalyst cannot prune any output column)."""
+executed via `plans.profiler.checksum`, a row-count + all-column
+xxhash64 aggregate, so Catalyst cannot prune any output column).
+
+The sidecar `bench_detail_sf<sf>_c<cpus>.json` holds the detail line
+plus `counts`: per query, the jobs, stages, tasks, task seconds,
+shuffle write bytes/records, spill and input bytes of its last timed
+rep, read exactly from the Spark status store."""
 
 from __future__ import annotations
 
@@ -169,31 +174,25 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> int:
-    """Force FULL evaluation of every output column AND any output
-    ordering. A bare count() lets Catalyst prune unused columns, so
-    projection-only queries would skip their expensive expressions;
-    and a plain checksum aggregate lets EliminateSorts drop a final
-    orderBy (the sort_values bench never executed its sort, r1-r4).
-    The nondeterministic position column blocks sort elimination — a
-    real consumer collecting ordered results pays for the sort, so the
-    bench should too (the DuckDB oracle side executes its ORDER BY)."""
-    import pyspark.sql.functions as F
-
-    w = df.withColumn("__pos", F.monotonically_increasing_id())
-    r = w.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.pmod(F.xxhash64(*[F.col(c) for c in w.columns]), F.lit(1_000_003))
-        ).alias("chk"),
-    ).first()
-    return r["n"]
+def _counts(jobs: int, stages) -> dict:
+    """Per-query scheduling and execution counts for the sidecar."""
+    return {
+        "jobs": jobs,
+        "stages": len(stages),
+        "tasks": sum(s.tasks for s in stages),
+        "task_s": round(sum(s.run_s for s in stages), 3),
+        "shuffle_write_bytes": sum(s.shuffle_write_b for s in stages),
+        "shuffle_write_records": sum(s.shuffle_write_records for s in stages),
+        "spill_bytes": sum(s.spill_b for s in stages),
+        "input_bytes": sum(s.input_b for s in stages),
+    }
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     headline = [q for q in HEADLINE if q in set(only.split(","))] if only else HEADLINE
+    from dask_spark.plans.profiler import StatusReader, checksum
     from dask_spark.queries import REGISTRY
     from dask_spark.session import get_spark
 
@@ -208,7 +207,7 @@ def main():
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     for name in headline:
         try:
-            materialize(REGISTRY[name][0](spark, warm_dir))
+            checksum(REGISTRY[name][0](spark, warm_dir)).first()
         except Exception as exc:  # warmup must never fail the bench
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
     spark.catalog.clearCache()  # drop warmup persists before timing
@@ -216,7 +215,11 @@ def main():
     # Per-query error isolation: one broken query must never cost the
     # round its entire perf artifact — record null for failures, keep
     # timing the rest, and always emit the JSON line.
+    # Counts come from the status store, read after each timed rep and
+    # outside its timed window; the last rep's counts are kept.
     timings: dict[str, float | None] = {}
+    counts: dict[str, dict | None] = {}
+    reader = StatusReader(spark.sparkContext)
     for name in headline:
         fn, _ = REGISTRY[name]
         best, n = float("inf"), 0
@@ -228,18 +231,21 @@ def main():
             # tiering — measured 4.8s → 2.3s → 1.0s across reps for
             # the codegen-heaviest query. The timed min-of-2 below is
             # then genuinely steady-state throughput.
-            materialize(fn(spark, sf_dir))
+            checksum(fn(spark, sf_dir)).first()
             spark.catalog.clearCache()
             for _rep in range(2):  # min-of-2: steady-state, GC-noise-resistant
+                reader.mark()
                 t0 = time.time()
                 df = fn(spark, sf_dir)
-                n = materialize(df)
+                n = checksum(df).first()["__rows"]
                 best = min(best, time.time() - t0)
+                counts[name] = _counts(*reader.read())
                 spark.catalog.clearCache()
             timings[name] = round(best, 3)
             print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
         except Exception as exc:
             timings[name] = None
+            counts[name] = None
             spark.catalog.clearCache()
             print(f"# {name}: FAILED — {type(exc).__name__}: {exc}",
                   file=sys.stderr)
@@ -262,13 +268,16 @@ def main():
     # driver's 2000-char stdout tail at 136 queries, so PERF_r15 had
     # per_query={} / n_common=0 — the round's per-query speedups were
     # unrecoverable. Persist the same detail object to a file next to
-    # bench.py so per-query comparisons survive the tail capture. The
-    # stdout contract is UNCHANGED (same two lines, compact line last).
+    # bench.py so per-query comparisons survive the tail capture, plus
+    # the per-query counts, which stay out of stdout (that line is
+    # already too long). The stdout contract is UNCHANGED (same two
+    # lines, compact line last).
     try:
         out_path = Path(__file__).resolve().parent / (
             f"bench_detail_sf{sf}_c{detail['cpus']}.json"
         )
-        out_path.write_text(json.dumps(detail, indent=1) + "\n")
+        sidecar = {**detail, "counts": counts}
+        out_path.write_text(json.dumps(sidecar, indent=1) + "\n")
     except OSError as exc:  # read-only checkout must never fail the bench
         print(f"# bench detail sidecar not written: {exc}", file=sys.stderr)
     # Detailed per-query line first (human-facing; too long for the

@@ -3,12 +3,14 @@ dask/diagnostics/__init__.py — ProgressBar, Profiler,
 ResourceProfiler, CacheProfiler, Callback, visualize).
 
 dask's profilers are scheduler-callback hooks; Spark's equivalent
-signals are the status tracker (stage/task progress), the storage
-status (cached blocks), and the driver process itself (resources).
-Each profiler here polls the matching signal from a daemon thread —
-the same pattern as ProgressBar — so they work around ANY action run
-inside the ``with`` block and compose like dask's (nest the context
-managers).
+signals are the status store (jobs and stages), the storage status
+(cached blocks), and the driver process itself (resources).
+``Profiler`` reads the stages of the ``with`` block exactly from the
+status store when the block exits (``plans.profiler.StatusReader``).
+``ResourceProfiler`` and ``CacheProfiler`` are time series, so they
+poll their signal from a daemon thread — the same pattern as
+ProgressBar. All of them work around ANY action run inside the block
+and compose like dask's (nest the context managers).
 
 ``visualize`` renders text tables instead of bokeh plots (no plotting
 stack in this environment; the data is the same shape as dask's
@@ -37,7 +39,8 @@ CacheData = namedtuple(
 
 class Callback:
     """reference dask/callbacks.py Callback — the hook-structure base
-    the profilers share: _start/_poll/_finish over a daemon thread."""
+    the profilers share: _on_start/_poll/_on_finish over a daemon
+    thread (``Profiler`` replaces enter/exit with a status-store read)."""
 
     _dt = 0.05
 
@@ -104,29 +107,29 @@ class Callback:
 class Profiler(Callback):
     """reference dask/diagnostics/profile.py Profiler — per-task
     timings. The Spark schedulable unit visible from Python is the
-    STAGE; ``results()`` returns one StageData per stage observed in
-    the block, with first-seen/last-seen timestamps."""
+    STAGE; ``results`` holds one StageData per stage that ran in the
+    block, read exactly from the status store on exit (no polling
+    thread, so ``dt`` is accepted and unused). ``start``/``end`` are
+    the stage's submission/completion times in seconds after entering
+    the block."""
 
-    def _on_start(self):
-        self._seen: dict[int, list] = {}
+    def __enter__(self):
+        from dask_spark.plans.profiler import StatusReader
 
-    def _poll(self):
-        tracker = self._sc().statusTracker()
-        now = default_timer() - self._t0
-        for sid in tracker.getActiveStageIds():
-            info = tracker.getStageInfo(sid)
-            if info is None:
-                continue
-            if sid not in self._seen:
-                self._seen[sid] = [info.name, info.numTasks, now, now]
-            else:
-                self._seen[sid][3] = now
+        self.results = []
+        self._t0 = time.time()
+        self._reader = StatusReader(self._sc())
+        return self
 
-    def _on_finish(self):
+    def __exit__(self, *exc):
+        _, stages = self._reader.read()
         self.results = [
-            StageData(sid, name, ntasks, start, end)
-            for sid, (name, ntasks, start, end) in sorted(self._seen.items())
+            StageData(s.stage_id, s.name, s.tasks,
+                      s.start - self._t0, s.end - self._t0)
+            for s in stages
         ]
+
+    register = __enter__
 
 
 class ResourceProfiler(Callback):

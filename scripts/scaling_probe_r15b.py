@@ -17,7 +17,8 @@ Measured per scale:
   temperature-mix step's tiny per-source count aggs are part of its
   documented design and are included in the wall),
 - the Spark-measured whole-pipeline exchange bill (shuffle write
-  bytes/records, spill) via stage deltas on the status REST API,
+  bytes/records, spill) read from the Spark status store
+  (plans.profiler.StatusReader),
 - invariant checks:
   * exact-dup keeper fraction — scale-invariant by construction,
   * near-dup drop fraction — scale-invariant by construction,
@@ -38,7 +39,6 @@ import math
 import os
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -46,6 +46,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from dask_spark.frame import DaskFrame  # noqa: E402
+from dask_spark.plans.profiler import StatusReader  # noqa: E402
 from dask_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,12 +77,6 @@ def replicate(spark, scale: int):
             " ",
         ).alias("text"),
     ).repartition(32)
-
-
-def _stages(ui, app):
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as fh:
-        return {s["stageId"]: s for s in json.load(fh)}
 
 
 def premix(docs_sdf):
@@ -144,16 +139,15 @@ def pipeline(spark, docs_sdf):
 
 
 def main():
-    spark = get_spark("scaling-probe-r15b", **{"spark.ui.enabled": "true"})
+    spark = get_spark("scaling-probe-r15b")
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
+    reader = StatusReader(spark.sparkContext)
     res: dict = {"scales": SCALES, "sf_dir": SF_DIR}
 
     for scale in SCALES:
         docs = replicate(spark, scale).persist()
         n_docs = docs.count()
-        before = _stages(ui, app)
+        reader.mark()
         t0 = time.perf_counter()
         out = pipeline(spark, docs).persist()
         summary = out.agg(
@@ -162,12 +156,10 @@ def main():
             F.max("shard").alias("max_shard"),
         ).first()
         wall = round(time.perf_counter() - t0, 2)
-        after = _stages(ui, app)
-        new = [s for sid, s in after.items() if sid not in before]
-        shuf_b = sum(s.get("shuffleWriteBytes", 0) for s in new)
-        shuf_r = sum(s.get("shuffleWriteRecords", 0) for s in new)
-        spill = sum(s.get("memoryBytesSpilled", 0)
-                    + s.get("diskBytesSpilled", 0) for s in new)
+        _, new = reader.read()
+        shuf_b = sum(s.shuffle_write_b for s in new)
+        shuf_r = sum(s.shuffle_write_records for s in new)
+        spill = sum(s.spill_b for s in new)
 
         # invariant recomputation (untimed)
         from dask_spark.functions.text import quality_score

@@ -562,6 +562,41 @@ def test_diagnostics_profilers(spark, tables):
     assert len(prof2.results) >= 0  # no crash; results frozen
 
 
+@pytest.mark.smoke
+def test_profiler_records_every_stage(spark, tables):
+    """Profiler rows are exact: one per stage that ran in the block,
+    even when every stage is shorter than a 50 ms polling interval. The
+    expected count comes from the status tracker's job-group view, not
+    from the reader the Profiler uses; skipped stages ran no task."""
+    from dask_spark.diagnostics import Profiler
+
+    sc = spark.sparkContext
+    li, orders = tables["lineitem"], tables["orders"]
+    try:
+        for rep in range(3):
+            group = f"profiler-exactness-{rep}"
+            sc.setJobGroup(group, group)
+            with Profiler(spark=spark) as prof:
+                # join + groupby + sort: five short stages at sf0.001
+                li.merge(orders, left_on="l_orderkey", right_on="o_orderkey") \
+                    .groupby("o_orderpriority").agg({"l_quantity": "sum"}) \
+                    .sort_values("o_orderpriority").compute()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            tracker = sc.statusTracker()
+            ran = {
+                sid
+                for jid in tracker.getJobIdsForGroup(group)
+                for sid in tracker.getJobInfo(jid).stageIds
+                if tracker.getStageInfo(sid).numCompletedTasks > 0
+            }
+            assert len(ran) >= 3
+            assert len(prof.results) == len(ran)
+            assert {r.stage_id for r in prof.results} == ran
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def _splan(sdf) -> str:
     return sdf._jdf.queryExecution().sparkPlan().toString()
 

@@ -1381,7 +1381,7 @@ class Series:
         driver offsets — operators/sort.py with_global_index), then the
         lag pairing is a self-equi-join on index (parallel shuffle on a
         uniform long key) feeding one corr aggregate."""
-        from dask_spark.operators.sort import release, with_global_index
+        from dask_spark.operators.sort import with_global_index
 
         ob = order_by or self._name
         base = self._frame._sdf.select(
@@ -1391,10 +1391,7 @@ class Series:
         xs = idx.select("__i", "__x")
         ys = idx.select((F.col("__i") + F.lit(lag)).alias("__i"),
                         F.col("__x").alias("__y"))
-        out = xs.join(ys, "__i").agg(F.corr("__x", "__y")).first()[0]
-        if getattr(idx, "_ds_pinned", None) is not None:
-            release(idx._ds_pinned)
-        return out
+        return xs.join(ys, "__i").agg(F.corr("__x", "__y")).first()[0]
 
     def is_monotonic_increasing(self, order_by: str) -> bool:
         """reference: _collection.py:4624 — dask checks along the
@@ -1552,7 +1549,7 @@ class Series:
         (top/bottom) — except dense, which pandas normalizes by the
         DISTINCT value count (nulls counting as one value when
         ranked)."""
-        from dask_spark.operators.sort import release, with_global_index
+        from dask_spark.operators.sort import with_global_index
 
         if na_option not in ("keep", "top", "bottom"):
             raise ValueError("na_option must be keep|top|bottom")
@@ -1574,7 +1571,7 @@ class Series:
             F.count(self._name).cast("bigint").alias("__nn"),
         )
 
-        def _finish(out, idx, denom=None):
+        def _finish(out, denom=None):
             nn_rank = F.col("rank")
             n_null = F.col("__n") - F.col("__nn")
             if na_option == "keep":
@@ -1657,8 +1654,6 @@ class Series:
                 out = both.drop("__n", "__nn", "__nd") if (
                     "__nd" in both.columns
                 ) else both.drop("__n", "__nn")
-            if getattr(idx, "_ds_pinned", None) is not None:
-                release(idx._ds_pinned)
             return Series(DaskFrame(out), F.col("rank"), self._name)
 
         if method == "dense":
@@ -1669,7 +1664,7 @@ class Series:
             )
             out = base.join(dense, self._name)
             # pandas pct for dense divides by nunique, not n
-            return _finish(out, idx, denom=distinct)
+            return _finish(out, denom=distinct)
         idx = with_global_index(base, self._name, "__r")
         out = idx.select(
             self._name, (F.col("__r") + 1).cast("bigint").alias("rank")
@@ -1700,7 +1695,7 @@ class Series:
         # a Series, like pandas/dask rank — chaining Series ops works;
         # ordering is by value (the engine has no implicit row order,
         # so positional alignment to the source frame is not defined)
-        return _finish(out, idx)
+        return _finish(out)
 
     def to_frame_with(self, *extra: str) -> "DaskFrame":
         """Value column + carried order/key columns; an extra equal to

@@ -230,7 +230,7 @@ def peak_concurrency(events, window_seconds: int = 1800,
     throughout — bit-identical to the chained form."""
     from pyspark.sql import Window
 
-    from dask_spark.operators.sort import _pin, range_bucket, release
+    from dask_spark.operators.sort import range_bucket
 
     sdf = events._sdf if isinstance(events, DaskFrame) else events
     sdf = sdf.filter(F.col(ts_col).isNotNull())
@@ -247,8 +247,7 @@ def peak_concurrency(events, window_seconds: int = 1800,
         F.lit(-1).cast("bigint").alias("d"),
     )
     m = starts.unionAll(ends)
-    bucketed, _nb = range_bucket(m, "k")
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(m, "k")
     w = (
         Window.partitionBy("__pid").orderBy("k")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -266,7 +265,6 @@ def peak_concurrency(events, window_seconds: int = 1800,
         )
         .collect()
     )
-    release(ranged)
     by_pid: dict = {}
     for r in per_bd:
         by_pid.setdefault(r["__pid"], []).append(r)

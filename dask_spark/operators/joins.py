@@ -166,11 +166,10 @@ def _asof_keyless_base(unioned, on: str, payload, direction: str):
     turns them into one seed row per bucket, unioned back as synthetic
     right rows; range partitioning keeps equal keys in one bucket, so a
     seed always sorts strictly before (after) every core row."""
-    from dask_spark.operators.sort import _pin, range_bucket
+    from dask_spark.operators.sort import range_bucket
 
     spark = unioned.sparkSession
-    bucketed, n = range_bucket(unioned, on)
-    tagged = _pin(bucketed)
+    tagged, n = range_bucket(unioned, on)
     struct = F.struct(F.col(on).alias("__on"),
                       *[F.col(c).alias(c) for c in payload])
     dirs = [d for d in ("backward", "forward") if direction in (d, "nearest")]

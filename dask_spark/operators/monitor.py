@@ -124,7 +124,7 @@ def ks_drift(reference, current, value_col: str, round_dp: int = 6,
     from pyspark.sql.types import (IntegerType, LongType, StructField,
                                    StructType)
 
-    from dask_spark.operators.sort import _pin, range_bucket, release
+    from dask_spark.operators.sort import range_bucket
 
     ref = reference._sdf if isinstance(reference, DaskFrame) else reference
     cur = current._sdf if isinstance(current, DaskFrame) else current
@@ -190,8 +190,7 @@ def ks_drift(reference, current, value_col: str, round_dp: int = 6,
     # two independent cumulative() calls re-sampled cuts and re-ran
     # the union aggregate per scan (3.7s -> ~2.1s at sf0.1,
     # identical output).
-    bucketed, _nb = range_bucket(g, "v")
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(g, "v")
     totals = {
         row["__pid"]: (row["tr"], row["tc"])
         for row in ranged.groupBy("__pid").agg(
@@ -201,7 +200,6 @@ def ks_drift(reference, current, value_col: str, round_dp: int = 6,
     n_ref = sum(int(tr or 0) for tr, _ in totals.values())
     n_cur = sum(int(tc or 0) for _, tc in totals.values())
     if n_ref == 0 or n_cur == 0:
-        release(ranged)
         g.unpersist()
         raise ValueError("ks_drift: empty reference or current sample")
     offsets, ar, ac = [], 0, 0
@@ -228,7 +226,6 @@ def ks_drift(reference, current, value_col: str, round_dp: int = 6,
         .select(diff.alias("__diff"))
         .agg(F.max("__diff")).first()[0]
     )
-    release(ranged)
     g.unpersist()
     d = round(float(d_num) / (float(n_ref) * float(n_cur)), round_dp)
     spark = ref.sparkSession
@@ -348,7 +345,7 @@ def cusum_alarms(events, ts_col: str = "ts", slack: float = 0.5,
     from pyspark.sql.types import (IntegerType, LongType, StructField,
                                    StructType)
 
-    from dask_spark.operators.sort import _pin, range_bucket, release
+    from dask_spark.operators.sort import _pin, range_bucket
 
     bucketed, _nb = range_bucket(staged, "day")
     w = (
@@ -755,7 +752,7 @@ def gini_coefficient(frame, value_col: str, key_col: str,
     # bit-identical to the chained form.
     from pyspark.sql import Window
 
-    from dask_spark.operators.sort import _pin, range_bucket, release
+    from dask_spark.operators.sort import range_bucket
 
     staged = per.select(
         "k", "x6",
@@ -764,8 +761,7 @@ def gini_coefficient(frame, value_col: str, key_col: str,
             F.col("k").cast("string"),
         ).alias("__ord"),
     ).persist()  # aggregate input: cuts job + scan share one compute
-    bucketed, _nb = range_bucket(staged, "__ord")
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(staged, "__ord")
     w = Window.partitionBy("__pid").orderBy("__ord")
     li = F.row_number().over(w).cast("decimal(38,0)")
     per_b = {
@@ -778,7 +774,6 @@ def gini_coefficient(frame, value_col: str, key_col: str,
             .alias("s"),
         ).collect()
     }
-    release(ranged)
     staged.unpersist()
     n = t = s = a = 0
     for pid in sorted(per_b):

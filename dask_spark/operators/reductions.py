@@ -7,17 +7,8 @@ JVM-codegen'd."""
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
-
-# Broadcast budget for spearman's rank-table re-attach join (bytes of
-# (value, rank) rows at ~24 B each); sized like the session's 64 MB
-# autoBroadcastJoinThreshold, env-overridable for cluster memory.
-_SPEARMAN_BROADCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RANK_BROADCAST_BYTES", str(64 << 20))
-)
 
 
 def describe(frame, percentiles=None, exact: bool = True):
@@ -380,21 +371,26 @@ def spearman_corr(frame, col_x: str, col_y: str, round_dp: int = 6,
             bucketize("__y", st["mny"], st["mxy"]).alias("__y"),
         )
 
-    pinned = None
+    counts = None
     if exact:
-        from dask_spark.operators.sort import _pin, with_bucket
+        from dask_spark.operators.sort import with_bucket
 
         spark0 = base.sparkSession
         u = base.select(F.explode(F.array(
             F.struct(F.lit(0).alias("ax"), F.col("__x").alias("v")),
             F.struct(F.lit(1).alias("ax"), F.col("__y").alias("v")),
         )).alias("s")).select("s.ax", "s.v")
-        pinned = _pin(
-            u.groupBy("ax", "v").agg(F.count(F.lit(1)).alias("__c"))
-        )
+        # the value-count table feeds the cut sampling, the totals pass
+        # and the rank join, and this function returns only after its
+        # moments collect: persist it here and unpersist it below (the
+        # eager-consumer rule at sort._PINNED; the bucketed projection
+        # over it is not cached)
+        counts = u.groupBy("ax", "v").agg(
+            F.count(F.lit(1)).alias("__c")
+        ).persist()
         nb = max(spark0.sparkContext.defaultParallelism, 2)
         qs = [i / nb for i in range(1, nb)]
-        cr = pinned.agg(
+        cr = counts.agg(
             F.percentile_approx(
                 F.when(F.col("ax") == 0, F.col("v")), qs, 10000
             ).alias("c0"),
@@ -402,35 +398,31 @@ def spearman_corr(frame, col_x: str, col_y: str, round_dp: int = 6,
                 F.when(F.col("ax") == 1, F.col("v")), qs, 10000
             ).alias("c1"),
         ).first()
-        dt = pinned.schema["v"].dataType
-        bucketed = pinned
+        dt = counts.schema["v"].dataType
+        bucketed = counts
         for ax in (0, 1):
             cuts = sorted(
                 {float(c) for c in (cr[f"c{ax}"] or []) if c is not None}
             )
             bucketed = with_bucket(bucketed, "v", cuts, True, dt, f"__p{ax}")
-        # pin the bucketed table too, so the totals pass and the rank
-        # join read one cache. Over the pinned value-count table the
-        # bucket CASE projections are cheap, so this pin is neutral at
-        # sf0.1 (7.4 s vs 7.3 s without it); the input pin above is
-        # the one that pays (9.0 s with neither, see range_bucket)
-        bucketed = _pin(bucketed.withColumn(
+        bucketed = bucketed.withColumn(
             "__pid",
             F.when(F.col("ax") == 0, F.col("__p0")).otherwise(F.col("__p1")),
-        ).drop("__p0", "__p1"))
-        bucketed._ds_pinned_input = pinned
-        pinned = bucketed  # release target after the moments collect
+        ).drop("__p0", "__p1")
+        # per (axis, bucket): row total t (the rank offsets) and
+        # distinct-value count d (the rank-table size)
         totals = {
-            (r["ax"], r["__pid"]): int(r["t"])
+            (r["ax"], r["__pid"]): (int(r["t"]), int(r["d"]))
             for r in bucketed.groupBy("ax", "__pid")
-            .agg(F.sum("__c").alias("t")).collect()
+            .agg(F.sum("__c").alias("t"),
+                 F.count(F.lit(1)).alias("d")).collect()
         }
         offsets = []
         for ax in (0, 1):
             acc = 0
             for _, pid in sorted(k for k in totals if k[0] == ax):
                 offsets.append((ax, pid, acc))
-                acc += totals[(ax, pid)]
+                acc += totals[(ax, pid)][0]
         off_df = spark0.createDataFrame(
             offsets or [(0, 0, 0)], "ax int, __pid int, __off long"
         )
@@ -443,29 +435,30 @@ def spearman_corr(frame, col_x: str, col_y: str, round_dp: int = 6,
             (F.lit(2) * (F.sum("__c").over(w) + F.col("__off"))
              - F.col("__c") + F.lit(1)).cast("bigint").alias("__r"),
         )
-        # Re-attach ranks to rows. The rank table is DISTINCT-VALUE-
-        # bounded, and the totals collect above already told us the
-        # exact row count per axis — so pick the join strategy from
-        # KNOWN sizes, not Catalyst's cache-inflated estimates (r16,
-        # guide §3.1): when rows x 24 B (double + rank + slack) fits
-        # the broadcast budget, hint broadcast and the n-row base is
-        # not shuffled at all (it was previously exchanged TWICE, once
-        # per axis, through two sort-merge joins); above the budget —
-        # continuous data past ~2.7M distinct values — the SMJ path
-        # stands (and past ~1e7 the documented escalation is
-        # exact=False).
-        n_per_ax = [
-            sum(v for (a0, _), v in totals.items() if a0 == ax)
+        # Re-attach ranks to rows. The totals collect above already
+        # counted each axis's distinct values exactly, so pick the join
+        # strategy from KNOWN sizes, not Catalyst's cache-inflated
+        # estimates (r16, guide §3.1): when distinct values x 24 B
+        # (double + rank + slack) fit the session's
+        # spark.sql.autoBroadcastJoinThreshold, hint broadcast and the
+        # n-row base is not shuffled at all (it was previously
+        # exchanged TWICE, once per axis, through two sort-merge
+        # joins); above it (or with the threshold <= 0, Spark's "never
+        # broadcast") the SMJ path stands, and past ~1e7 distinct
+        # values the documented escalation is exact=False.
+        budget = spark0._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        n_distinct = [
+            sum(d for (a0, _), (_, d) in totals.items() if a0 == ax)
             for ax in (0, 1)
         ]
-        bcast_rows = _SPEARMAN_BROADCAST_BYTES // 24
 
         def rank_side(ax, vcol, rcol):
             t = ranks.filter(F.col("ax") == ax).select(
                 F.col("v").alias(vcol), F.col("__r").alias(rcol)
             )
-            # distinct values <= rows per axis (upper bound)
-            return F.broadcast(t) if n_per_ax[ax] <= bcast_rows else t
+            hint = budget > 0 and n_distinct[ax] * 24 <= budget
+            return F.broadcast(t) if hint else t
 
         joined = base.join(rank_side(0, "__x", "__r__x"), "__x").join(
             rank_side(1, "__y", "__r__y"), "__y"
@@ -509,10 +502,8 @@ def spearman_corr(frame, col_x: str, col_y: str, round_dp: int = 6,
         F.sum(rx * ry).alias("sxy"),
         F.sum(rx * rx).alias("sxx"), F.sum(ry * ry).alias("syy"),
     ).first()
-    if pinned is not None:
-        from dask_spark.operators.sort import release
-
-        release(pinned)
+    if counts is not None:
+        counts.unpersist()
     n = int(row["n"] or 0)
     spark = sdf.sparkSession
     if n == 0:
@@ -680,11 +671,10 @@ def roc_auc(frame, score_col: str, label_expr, round_dp: int = 6,
             n += c
             n_pos += cp
     else:
-        from dask_spark.operators.sort import _pin, range_bucket, release
+        from dask_spark.operators.sort import range_bucket
 
         g = g.persist()  # aggregate input: cuts job + scan share one compute
-        bucketed, _nb = range_bucket(g, "__s")
-        ranged = _pin(bucketed)
+        ranged, _nb = range_bucket(g, "__s")
         w = (
             Window.partitionBy("__pid").orderBy("__s")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -702,7 +692,6 @@ def roc_auc(frame, score_col: str, label_expr, round_dp: int = 6,
                       * F.col("__cp").cast("decimal(38,0)")).alias("s"),
             ).collect()
         }
-        release(ranged)
         g.unpersist()
         n = n_pos = rp2 = 0
         off = 0  # exclusive prefix of total counts = rank offset

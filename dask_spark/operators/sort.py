@@ -61,16 +61,21 @@ def repartition(frame, npartitions: int | None = None, on: Sequence[str] | None 
     return DaskFrame(sdf)
 
 
-# Bounded FIFO of persisted helper plans (range_bucket inputs for the
-# two-pass keyless ops). The cache is a PURE PERF optimization: bucket
-# ids are computed by ``range_bucket`` as a pure function of the row
-# against literal cuts, so an evicted/unpersisted plan that recomputes
-# lands every row in the SAME bucket and driver-collected per-bucket
-# stats baked into derived lazy plans stay valid. Eviction costs a
-# recompute, never correctness. (Previously these ops derived bucket
-# ids from repartitionByRange + spark_partition_id(), whose sampling
-# re-runs with a fresh seed on recompute — THAT design required the
-# pin for correctness; range_bucket removed the dependence.)
+# Bounded FIFO of persisted helper plans. One caching rule holds
+# across the package:
+# - an EAGER consumer (it collects its answer before returning)
+#   ``persist()``s an expensive input itself and ``unpersist()``s it
+#   before it returns — nothing it caches outlives the call;
+# - ``_pin`` only backs a LAZILY RETURNED frame whose plan reads the
+#   cache after the call returns (dedup's signature tables, the
+#   weighted-quantile value table, cusum's windowed prefix), so the
+#   FIFO, not the caller, decides when it is freed;
+# - a bucketed projection (``range_bucket``/``with_bucket``) is never
+#   cached: a row's bucket is a pure function of the row and the
+#   literal cuts, so recomputing it is cheap and lands every row in
+#   the SAME bucket, and per-bucket stats baked into a derived plan
+#   stay valid.
+# Eviction therefore costs a recompute, never correctness.
 _PINNED: list = []
 _PIN_LIMIT = 8
 
@@ -87,27 +92,6 @@ def _pin(df):
     while len(_PINNED) > _PIN_LIMIT:
         _PINNED.pop(0).unpersist()
     return df
-
-
-def release(df=None) -> None:
-    """Unpersist one pinned helper plan (or all, when df is None).
-    Mutates the FIFO in place — never rebinds it, so external
-    references to the list stay truthful. A handle carrying
-    ``_ds_pinned_input`` (a caller-chained inner pin, e.g. the
-    spearman fused rank build) releases that inner pin too — eager
-    consumers free both cache copies with one call."""
-    if df is None:
-        while _PINNED:
-            _PINNED.pop().unpersist()
-        return
-    inner = getattr(df, "_ds_pinned_input", None)
-    if inner is not None and inner is not df:
-        release(inner)
-    for i, p in enumerate(_PINNED):
-        if p is df:
-            del _PINNED[i]
-            df.unpersist()
-            return
 
 
 def _ord_double(col: str, dt):
@@ -166,23 +150,29 @@ def with_bucket(sdf, col: str, cuts, numeric: bool, dt, pid_col: str):
     nested-CASE expression: node (lo, hi) compares v against the
     middle cut and descends into exactly one half, so per-row
     evaluation is O(log #buckets) lazily-taken branches while the
-    expression holds each cut once (r16 — this replaced the chained
-    lo/hi projections below for small n: CollapseProject inlined each
-    step's lo/hi into the next, exponentially re-expanding the tree
-    whenever the plan was re-derived, which made the bucket projection
-    so expensive to recompute that every consumer had to pin the
-    bucketed output; the single expression has nothing to duplicate
-    and is pinned bit-for-bit against the chained form in
-    tests/test_optimization_r16.py).
+    expression holds each cut once. The single expression has
+    nothing for the optimizer to duplicate, which the r15 chain of
+    per-step lo/hi projections had: re-deriving a plan inlined each
+    step's lo/hi into the next and re-expanded the tree exponentially.
+    tests/test_optimization_r16.py pins this form bit-for-bit against
+    that chain, and both forms below against ``#{cuts <= v}``.
 
-    Past ``_TREE_MAX_CUTS`` the ceil(log2(n+1)) CHAINED lo/hi
-    projections remain (the dask analog is the binary search over
-    divisions in dask/dataframe/shuffle.py set_partitions_pre):
-    generated-code size stays O(log #buckets) instead of the nested
-    form's O(#buckets) nodes, which past a few hundred cuts outgrows
-    codegen method limits. Each step's lo/hi are materialized as
-    columns so the next step references resolved attributes — callers
-    on this path keep the r15 pin discipline (range_bucket docstring)."""
+    Past ``_TREE_MAX_CUTS`` the same binary search runs as ONE
+    ``aggregate`` higher-order expression (the dask analog is the
+    binary search over divisions in dask/dataframe/shuffle.py
+    set_partitions_pre): ceil(log2(n+1)) lambda steps carry a
+    (lo, hi) struct over the literal cut array, so the expression
+    holds each cut once and its size does not grow with the number
+    of steps, where the nested form's O(#buckets) nodes outgrow
+    codegen method limits past a few hundred cuts. The r15 chain had
+    served here too; with nothing cached under it, a join on the
+    bucket id pushed its inferred ``isnotnull`` filter down through
+    the chain, substituting every step's aliases into the next, and
+    planning a 300-bucket global index ran for minutes.
+    Neither form is cached by any caller: a bucketed projection is
+    recomputed per read (the caching rule at ``_PINNED``);
+    tests/test_plans.py pins an exact global index through this path
+    at 300 buckets."""
     import math
 
     if not cuts:
@@ -200,40 +190,30 @@ def with_bucket(sdf, col: str, cuts, numeric: bool, dt, pid_col: str):
                 F.lit(cuts[mid]) <= oc, node(mid + 1, hi)
             ).otherwise(node(lo, mid))
 
-        pid = F.when(F.col(col).isNull(), F.lit(0)).otherwise(node(0, n))
-        return sdf.withColumn(pid_col, pid)
-    sdf = (
-        sdf.withColumn("__bs_arr", F.array(*[F.lit(c) for c in cuts]))
-        .withColumn("__bs_v", oc)
-        .withColumn("__bs_lo", F.lit(0))
-        .withColumn("__bs_hi", F.lit(n))
-    )
-    # invariant: cuts[0..lo-1] <= v < cuts[hi..n-1]; converged extra
-    # steps are no-ops (cond is false once lo == hi)
-    for _ in range(max(1, math.ceil(math.log2(n + 1)))):
-        sdf = sdf.withColumn(
-            "__bs_mid",
-            F.floor((F.col("__bs_lo") + F.col("__bs_hi")) / 2).cast("int"),
-        )
-        le = (
-            F.try_element_at(F.col("__bs_arr"), F.col("__bs_mid") + 1)
-            <= F.col("__bs_v")
-        )
-        sdf = (
-            sdf.withColumn(
-                "__bs_lo2",
-                F.when(le, F.col("__bs_mid") + 1).otherwise(F.col("__bs_lo")),
+        found = node(0, n)
+    else:
+        arr = F.array(*[F.lit(c) for c in cuts])
+
+        # invariant: cuts[0..lo-1] <= v < cuts[hi..n-1]; converged
+        # extra steps are no-ops (cuts[lo] is out of range or > v
+        # once lo == hi)
+        def step(acc, _):
+            lo, hi = acc["lo"], acc["hi"]
+            mid = F.floor((lo + hi) / 2).cast("int")
+            le = F.try_element_at(arr, mid + 1) <= oc
+            return F.struct(
+                F.when(le, mid + 1).otherwise(lo).alias("lo"),
+                F.when(le, hi).otherwise(mid).alias("hi"),
             )
-            .withColumn(
-                "__bs_hi", F.when(le, F.col("__bs_hi")).otherwise(F.col("__bs_mid"))
-            )
-            .withColumn("__bs_lo", F.col("__bs_lo2"))
-            .drop("__bs_lo2", "__bs_mid")
+
+        found = F.aggregate(
+            F.sequence(F.lit(1), F.lit(max(1, math.ceil(math.log2(n + 1))))),
+            F.struct(F.lit(0).alias("lo"), F.lit(n).alias("hi")),
+            step,
+            lambda acc: acc["lo"],
         )
-    pid = F.when(F.col(col).isNull(), F.lit(0)).otherwise(F.col("__bs_lo"))
-    return sdf.withColumn(pid_col, pid).drop(
-        "__bs_arr", "__bs_v", "__bs_lo", "__bs_hi"
-    )
+    pid = F.when(F.col(col).isNull(), F.lit(0)).otherwise(found)
+    return sdf.withColumn(pid_col, pid)
 
 
 def range_bucket(sdf, col: str, num_partitions: int | None = None,
@@ -243,30 +223,24 @@ def range_bucket(sdf, col: str, num_partitions: int | None = None,
     (global index, halos, prefix scans, as-of carries): those ops run
     a tiny per-bucket stats job, bake the collected stats into the
     output plan, and rely on the output scan reproducing the SAME
-    buckets — guaranteed here by construction (see with_bucket), with
-    ``_pin`` as an optional perf cache only. Returns
-    ``(bucketed_sdf, n_buckets)``.
+    buckets — guaranteed here by construction (see with_bucket).
+    Returns ``(bucketed_sdf, n_buckets)``.
 
-    range_bucket itself pins NOTHING (r15, measured): an automatic
-    input pin here double-caches inputs the caller already persisted
-    (cusum's daily, ks_drift's g) and, for the common cheap
-    scan+project input, the columnar cache build costs more than the
-    one recompute it saves. Callers pin what their cost model
-    justifies: `_pin(bucketed)` when the output is read by a stats
-    pass AND the main pass. The bucket projection itself is cheap at
-    ≤ _TREE_MAX_CUTS cuts (one nested CASE, see with_bucket); what the
-    pin spares is a recompute of the INPUT subtree under it for the
-    second pass, so it pays when that subtree is expensive and is
-    neutral on a plain scan. Measured at sf0.1 on 4 cores with every
-    `_pin` swapped for a no-op (median of 3, identical results):
-    events_cusum, drift_ks and keyless_ffill within 0.1 s,
-    keyless_cumsum 2.0 s pinned vs 1.8 s unpinned, corr_spearman
-    7.5 vs 9.0 s — and there the gain is its input pin on the
-    value-count aggregate: dropping only its bucketed pin left it
-    within noise. Callers also `persist` expensive (aggregate/join)
-    INPUT subtrees so the cut-sampling job and the bucketed build
-    don't each recompute them (the ks_drift g.persist fix, 3.7s→2.1s
-    at sf0.1)."""
+    Nothing here or in any caller caches the bucketed frame: the
+    bucket is one expression over literal cuts, so a consumer
+    that reads it twice (stats pass + main pass) recomputes a cheap
+    projection. What such a second read also recomputes is the INPUT
+    subtree under it; an eager consumer whose input is expensive (an
+    aggregate or a join) ``persist``s that input itself so the
+    cut-sampling job, the stats pass and the main pass share one
+    compute, and ``unpersist``s it before returning (ks_drift's g,
+    gini's staged, cusum's daily — the g.persist fix took drift_ks
+    from 3.7 s to 2.1 s at sf0.1). A lazily returned frame relies on
+    the caller's own ``persist`` instead. Dropping the pins on the
+    bucketed frame at all 11 former sites, measured at sf0.1 on 4
+    cores (3 interleaved runs per side): identical checksums in the
+    13 registry queries that reach them, one job fewer in 11 of them
+    (two in autocorr), and no median slower by more than 0.05 s."""
     n = num_partitions or max(sdf.sparkSession.sparkContext.defaultParallelism, 2)
     cuts, numeric = range_cuts(sdf, col, n)
     dt = sdf.schema[col].dataType
@@ -310,8 +284,7 @@ def ranged_with_halo(sdf, order_by, before_rows: int = 0,
     from pyspark.sql import Window
 
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
-    bucketed, _nb = range_bucket(sdf, cols[0], num_partitions, pid_col="__rpid")
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(sdf, cols[0], num_partitions, pid_col="__rpid")
     oc0 = F.col(cols[0]).cast("double")
     stats = sorted(
         ranged.groupBy("__rpid").agg(
@@ -407,14 +380,12 @@ def with_global_index(sdf, order_by, index_col: str = "__idx",
        window) + broadcast-joined cumulative offset.
 
     Because bucket ids are a pure row function, the baked offsets stay
-    valid even if the perf-cache pin is evicted and the plan recomputes
-    (eager consumers call ``release(handle)`` — the returned DataFrame
-    carries it as ``._ds_pinned``)."""
+    valid when the output plan recomputes the bucketing, which it
+    does on every read: nothing is cached here."""
     from pyspark.sql import Window
 
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
-    bucketed, _nb = range_bucket(sdf, cols[0], num_partitions)
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(sdf, cols[0], num_partitions)
     counts = {
         r["__pid"]: r["cnt"]
         for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
@@ -426,13 +397,11 @@ def with_global_index(sdf, order_by, index_col: str = "__idx",
     spark = sdf.sparkSession
     off_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in cols])
-    out = (
+    return (
         ranged.join(F.broadcast(off_df), "__pid")
         .withColumn(index_col, F.row_number().over(w) - 1 + F.col("__off"))
         .drop("__pid", "__off")
     )
-    out._ds_pinned = ranged
-    return out
 
 
 def stratified_sample(frame, col: str, fractions: dict, seed: int = 42):

@@ -593,12 +593,11 @@ def _cumulative_keyless(frame, col: str, fn: str, order_by: str, name: str):
     Decomposable fns only, matching the keyed path's fn set."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from dask_spark.operators.sort import _pin, range_bucket
+    from dask_spark.operators.sort import range_bucket
 
     sdf = frame._sdf
     spark = sdf.sparkSession
-    bucketed, _nb = range_bucket(sdf, order_by)
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(sdf, order_by)
     agg = _CUM_FNS[fn]
     src, missing = _cum_missing(sdf, col, fn)
     totals = {
@@ -675,12 +674,11 @@ def fill_directional(frame, cols, order_by: str, by=None,
 def _fill_keyless(frame, cols, order_by: str, forward: bool):
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from dask_spark.operators.sort import _pin, range_bucket
+    from dask_spark.operators.sort import range_bucket
 
     sdf = frame._sdf
     spark = sdf.sparkSession
-    bucketed, _nb = range_bucket(sdf, order_by)
-    ranged = _pin(bucketed)
+    ranged, _nb = range_bucket(sdf, order_by)
     # boundary value per bucket: the non-null value at the max (ffill) /
     # min (bfill) order position — null orderings exclude null rows
     pick_by = F.max_by if forward else F.min_by

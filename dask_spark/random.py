@@ -768,8 +768,8 @@ class RandomState:
         is just floor(key·nb) — balanced, deterministic, no quantile
         probe and no binary-search layers (the generic
         with_global_index path re-inlines a computed order key into
-        every bucket comparison when its cache pin is gone — measured
-        19s vs 2s at n=5000). One tiny per-bucket counts job bakes the
+        every bucket comparison, and it caches no bucketed frame —
+        measured 19s vs 2s at n=5000). One tiny per-bucket counts job bakes the
         offsets; the per-bucket window does the rest."""
         from pyspark.sql import Window
 

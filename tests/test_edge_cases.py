@@ -7,6 +7,10 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from dask_spark.array import DArray
+from dask_spark.operators.behavior import peak_concurrency
+from dask_spark.operators.monitor import gini_coefficient, ks_drift
+from dask_spark.operators.reductions import roc_auc, spearman_corr
 from tests.conftest import assert_eq
 
 
@@ -293,20 +297,68 @@ def test_read_hdf_avro_plumbing(tmp_path):
         ds.read_avro(str(tmp_path / "x.avro"))
 
 
-def test_autocorr_releases_pinned_plan(tables):
-    """Eager consumers must release their persisted helper plan (the
-    round-2 cache-leak advice): the pin FIFO returns to its prior size
-    after autocorr completes."""
-    from dask_spark.operators.sort import _PINNED, release
+def _orders_ks(t):
+    import pyspark.sql.functions as F
 
-    # drain first: at FIFO capacity (_PIN_LIMIT) autocorr's own pin
-    # evicts an older entry, so "size returns to prior" only holds
-    # from an empty FIFO — the invariant under test is that autocorr
-    # leaves NO pin of its own behind
-    release(None)
-    v = tables["events"].value.autocorr(lag=1, order_by="event_id")
-    assert v is not None
-    assert len(_PINNED) == 0
+    o = t["orders"]._sdf
+    return ks_drift(o.filter(F.col("o_orderdate") < "1996-01-01"),
+                    o.filter(F.col("o_orderdate") >= "1996-01-01"),
+                    "o_totalprice")
+
+
+def _keyless_asof(t):
+    e = t["events"][["event_id", "value"]]
+    right = e.rename({"value": "rv"})
+    return e.merge_asof(right[right.event_id % 3 == 0], on="event_id")
+
+
+# EAGER ops collect their answer before returning; LAZY ops return a
+# frame whose plan still re-reads the range-bucketed input.
+_EAGER = {
+    "autocorr": lambda t: t["events"].value.autocorr(
+        lag=1, order_by="event_id"),
+    "spearman_exact": lambda t: spearman_corr(
+        t["lineitem"], "l_quantity", "l_extendedprice"),
+    "ks_drift_exact": _orders_ks,
+    "roc_auc": lambda t: roc_auc(
+        t["orders"], "o_totalprice", "o_orderpriority = '1-URGENT'"),
+    "gini": lambda t: gini_coefficient(
+        t["orders"], "o_totalprice", "o_custkey"),
+    "peak_concurrency": lambda t: peak_concurrency(
+        t["events"], window_seconds=1800),
+}
+_LAZY = {
+    "cumsum": lambda t: t["events"].cumsum("value", order_by="event_id"),
+    "ffill": lambda t: t["events"].ffill("value", order_by="event_id"),
+    "rolling_rows": lambda t: t["events"].rolling(
+        3, on="event_id").sum("value"),
+    "merge_asof": _keyless_asof,
+    "arr_slice": lambda t: DArray.from_frame(
+        t["embeddings"], "embedding", "vec_id")[5:40:3],
+    "rank": lambda t: t["events"].value.rank(),
+}
+
+
+@pytest.mark.parametrize(
+    "name", sorted(_EAGER) + sorted(_LAZY)
+)
+def test_keyless_ops_cache_hygiene(tables, spark, name):
+    """The caching rule (operators/sort.py ``_PINNED``): an eager
+    keyless op persists only what it unpersists before returning, so
+    the pin FIFO and Spark's cache manager are left as found; a lazy
+    keyless op never pins its range-bucketed frame, so it adds nothing
+    to the FIFO (and, caching nothing else, nothing to the cache
+    manager either)."""
+    from dask_spark.operators.sort import _PINNED
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # compared by identity: an added pin shows, and so does the
+    # eviction an added pin causes when the FIFO is at capacity
+    pins_before = [id(p) for p in _PINNED]
+    cached_before = cm.numCachedEntries()
+    assert {**_EAGER, **_LAZY}[name](tables) is not None
+    assert [id(p) for p in _PINNED] == pins_before
+    assert cm.numCachedEntries() == cached_before
 
 
 def test_code_review_round5_edges(spark):

@@ -4801,3 +4801,145 @@ def test_psi_drift_multi_matches_single(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="no columns"):
         psi_drift_multi(ref, cur, [])
+
+
+# ---- fused-kernel / assume_canonical exactness pins: each fast form
+# must equal the expression or self-canonicalizing form it replaced
+
+
+def test_triangle_count_assume_canonical(spark):
+    import pyspark.sql.functions as F
+
+    from dask_spark.operators.graph import triangle_count
+
+    # messy input: duplicates, both orientations, self loop
+    rows = [(1, 2), (2, 1), (2, 3), (1, 3), (3, 4), (4, 1), (2, 2),
+            (3, 1), (4, 3)]
+    sdf = spark.createDataFrame(rows, "a bigint, b bigint")
+    base = triangle_count(sdf, "a", "b").compute()
+
+    canon = (
+        sdf.select(F.least("a", "b").alias("a"),
+                   F.greatest("a", "b").alias("b"))
+        .filter(F.col("a") < F.col("b")).distinct()
+    )
+    fast = triangle_count(
+        canon, "a", "b", assume_canonical=True
+    ).compute()
+    lhs = base.sort_values("node", ignore_index=True)
+    rhs = fast.sort_values("node", ignore_index=True)
+    pd.testing.assert_frame_equal(lhs, rhs)
+
+
+def test_assign_kernel_query_dots_match_expression(spark):
+    """_assign_kernel's dq/dv columns must be bit-identical to the
+    unrolled vector.dot expression they replaced in ann_ivf_checked."""
+    import pyspark.sql.functions as F
+
+    from dask_spark.functions.vector import dot as v_dot
+    from dask_spark.operators.cluster import _assign_kernel
+
+    rng = np.random.RandomState(11)
+    dim, n = 16, 120
+    vecs = rng.normal(size=(n, dim)).round(3)
+    q = [float(x) for x in rng.normal(size=dim).round(3)]
+    pdf = pd.DataFrame({"vec_id": range(n), "__v": [list(v) for v in vecs]})
+    base = spark.createDataFrame(pdf)
+    cents = [list(map(float, vecs[i])) for i in range(4)]
+    schema, kernel = _assign_kernel(
+        cents, dim, "vec_id", "bigint", ("vec_id", "cluster", "dq", "dv"),
+        query=q,
+    )
+    got = base.mapInPandas(kernel, schema).orderBy("vec_id").collect()
+    qlit = F.array(*[F.lit(x) for x in q])
+    exp = base.select(
+        "vec_id",
+        v_dot(F.col("__v"), qlit, dim).alias("dq"),
+        v_dot(F.col("__v"), F.col("__v"), dim).alias("dv"),
+    ).orderBy("vec_id").collect()
+    for g, e in zip(got, exp):
+        assert g["dq"] == e["dq"]  # exact doubles, no tolerance
+        assert g["dv"] == e["dv"]
+
+
+def test_decode_kernel_phash_matches_expression(spark):
+    """decode_features(with_phash=dim) must reproduce the phash_bits
+    expression bit-for-bit (same L2R mean fold, strict > threshold)."""
+    import pyspark.sql.functions as F
+
+    from dask_spark.frame import DaskFrame
+    from dask_spark.functions.multimodal import (attach_fake_media,
+                                                 decode_features,
+                                                 phash_bits)
+
+    rows = [(i, f"doc text {i} {'x' * (i % 7)}") for i in range(200)]
+    d = DaskFrame(spark.createDataFrame(rows, "doc_id bigint, text string"))
+    media = attach_fake_media(d)
+    dim = 32
+    fused = decode_features(media, out_dim=dim + 2, with_phash=dim)._sdf \
+        .select("doc_id", "ph").orderBy("doc_id").collect()
+    feats = decode_features(media, out_dim=dim + 2)._sdf
+    expr = feats.select(
+        "doc_id",
+        phash_bits(F.slice(F.col("features"), 1, dim), dim).alias("ph"),
+    ).orderBy("doc_id").collect()
+    assert [r["ph"] for r in fused] == [r["ph"] for r in expr]
+
+
+def test_top_plus_totals_matches_separate_actions(spark):
+    from dask_spark.functions.text import _top_plus_totals
+
+    import pyspark.sql.functions as F
+
+    toks = spark.createDataFrame(
+        [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 3 + [("d",)] * 1,
+        "tok string",
+    )
+    counts = toks.groupBy("tok").count()
+    top, n_types, total = _top_plus_totals(counts, "tok", 2)
+    assert n_types == 4 and int(total) == 12
+    assert sorted((r["tok"], r["count"]) for r in top) == [("a", 5), ("b", 3)]
+
+
+def test_knn_join_arrow_scorer_matches_expression(spark):
+    """knn_join's mapInArrow dot kernel (r15: zero-copy list-buffer
+    reshape instead of per-row pandas stacking) must stay bit-identical
+    to the unrolled ordered-dot expression on the same pairs."""
+    import pyspark.sql.functions as F
+
+    from dask_spark.frame import DaskFrame
+    from dask_spark.functions.vector import dot as v_dot
+    from dask_spark.operators.similarity import knn_join
+
+    rng = np.random.RandomState(23)
+    dim, n = 16, 80
+    vecs = rng.normal(size=(n, dim)).round(3)
+    pdf = pd.DataFrame(
+        {"vec_id": range(n), "embedding": [list(v) for v in vecs]}
+    )
+    base = spark.createDataFrame(pdf)
+    d = DaskFrame(base)
+    got = (
+        knn_join(d, d, k=3, bands=4, planes=4, exclude_self=True,
+                 round_dp=9)
+        .compute().sort_values(["l_id", "rank"]).reset_index(drop=True)
+    )
+    v = F.col("embedding")
+    norms = base.select(
+        "vec_id",
+        (F.lit(1.0) / F.sqrt(v_dot(v, v, dim))).alias("inv"),
+    ).collect()
+    inv = {r["vec_id"]: r["inv"] for r in norms}
+    # expression-side replay of each returned pair's cosine, in the
+    # exact kernel op order: L2R dot, then *linv, then *rinv
+    vv = {i: vecs[i] for i in range(n)}
+    for _, row in got.iterrows():
+        a, b = vv[int(row["l_id"])], vv[int(row["r_id"])]
+        acc = 0.0
+        for i in range(dim):
+            acc += float(a[i]) * float(b[i])
+        acc *= inv[int(row["l_id"])]
+        acc *= inv[int(row["r_id"])]
+        assert row["cosine"] == round(acc, 9) or abs(
+            row["cosine"] - acc
+        ) < 1e-12

@@ -165,18 +165,22 @@ def test_hive_partition_pruning(spark, tables, tmp_path_factory):
     assert n == want
 
 
-def test_global_index_is_multi_partition(spark):
+@pytest.mark.parametrize("nparts", [8, 300])
+def test_global_index_is_multi_partition(spark, nparts):
     """autocorr/global-index path must never collapse to one partition
     (the round-1 weak item): rows spread over >1 partition AND the
-    index is exactly the global order."""
+    index is exactly the global order. 300 buckets exceed
+    sort._TREE_MAX_CUTS, so the second case runs with_bucket's
+    chained-projection binary search, which no caller caches."""
     import pyspark.sql.functions as F
 
-    from dask_spark.operators.sort import with_global_index
+    from dask_spark.operators.sort import _TREE_MAX_CUTS, with_global_index
 
+    assert nparts == 8 or nparts - 1 > _TREE_MAX_CUTS  # 299 cuts
     sdf = spark.range(10_000).select(
         (F.col("id") * 37 % 10_000).alias("k"), F.col("id").alias("v")
     )
-    idx = with_global_index(sdf, "k", "__i", num_partitions=8)
+    idx = with_global_index(sdf, "k", "__i", num_partitions=nparts)
     per_part = (
         idx.groupBy(F.spark_partition_id().alias("p")).count().collect()
     )

@@ -3,6 +3,7 @@ dask_expr/_reductions.py, _groupby.py — ACA → Spark partial agg)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -877,3 +878,75 @@ def test_describe_approx_mode(spark, tables):
             lo = s.quantile(max(p - 0.01, 0.0), interpolation="lower")
             hi = s.quantile(min(p + 0.01, 1.0), interpolation="higher")
             assert lo - 1e-9 <= a <= hi + 1e-9, (c, lab, a, lo, hi)
+
+
+# ---- spearman_corr exact path: both columns' rank tables come from
+# ONE unpivoted (axis, value) count table; ranks must equal the
+# per-column average ranks
+
+
+def test_spearman_fused_matches_scipy(spark):
+    from dask_spark.operators.reductions import spearman_corr
+
+    rng = np.random.RandomState(7)
+    x = np.round(rng.normal(size=400), 1)   # heavy ties
+    y = np.round(x * 0.5 + rng.normal(size=400), 1)
+    pdf = pd.DataFrame({"x": x, "y": y})
+    sdf = spark.createDataFrame(pdf)
+    got = spearman_corr(sdf, "x", "y").compute()
+    # scipy-free expected: pandas rank(average) + pearson
+    rx = pdf["x"].rank(method="average")
+    ry = pdf["y"].rank(method="average")
+    exp = round(float(np.corrcoef(rx, ry)[0, 1]), 6)
+    assert got["n"].iloc[0] == 400
+    assert got["rho"].iloc[0] == pytest.approx(exp, abs=2e-6)
+
+
+def test_spearman_fused_constant_column(spark):
+    from dask_spark.operators.reductions import spearman_corr
+
+    pdf = pd.DataFrame({"x": [1.0] * 10, "y": list(range(10))})
+    got = spearman_corr(spark.createDataFrame(pdf), "x", "y").compute()
+    assert got["rho"].iloc[0] is None or np.isnan(got["rho"].iloc[0])
+
+
+def _smj_in_last_execution(spark) -> int:
+    """SortMergeJoin nodes in the final (post-AQE) physical plan of the
+    newest SQL execution, read from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    newest = sql.executionsList(sql.executionsCount() - 1, 1).head()
+    nodes = sql.planGraph(newest.executionId()).allNodes()
+    return sum(
+        nodes.apply(i).name() == "SortMergeJoin" for i in range(nodes.size())
+    )
+
+
+@pytest.mark.parametrize("threshold,smj", [("2k", 1), ("-1", 2)])
+def test_spearman_broadcast_gate_counts_distinct_values(
+        spark, threshold, smj):
+    """The rank re-attach join is hinted broadcast when the side's
+    DISTINCT values x 24 B fit spark.sql.autoBroadcastJoinThreshold:
+    at 2 KiB the 5-value column (120 B) is hinted while the 400-value
+    one (9.6 KB) is not — gating on its 400 ROWS would hint neither —
+    and a threshold <= 0 hints no side. Both match the pandas ranks."""
+    from dask_spark.operators.reductions import spearman_corr
+
+    rng = np.random.RandomState(3)
+    n = 400
+    pdf = pd.DataFrame({
+        "x": (np.arange(n) % 5).astype(float),
+        "y": rng.permutation(n).astype(float),
+    })
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, threshold)
+        got = spearman_corr(spark.createDataFrame(pdf), "x", "y")
+        assert _smj_in_last_execution(spark) == smj
+    finally:
+        spark.conf.set(key, saved)
+    got = got.compute()
+    exp = round(float(np.corrcoef(pdf.x.rank(), pdf.y.rank())[0, 1]), 6)
+    assert got["n"].iloc[0] == n
+    assert got["rho"].iloc[0] == pytest.approx(exp, abs=2e-6)

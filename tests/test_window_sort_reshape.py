@@ -661,3 +661,16 @@ def test_get_dummies_kwarg_depth(spark):
     mc = get_dummies(f, columns=["c", "d"], dtype="boolean").compute()
     assert {"c_a", "c_b", "d_x", "d_y"} <= set(mc.columns)
     assert mc["d_x"].dtype == bool or str(mc["d_x"].dtype) == "boolean"
+
+
+def test_range_bucket_pins_nothing(spark):
+    """range_bucket caches nothing: a bucketed projection is recomputed
+    per read (the caching rule at operators/sort.py ``_PINNED``)."""
+    from dask_spark.operators.sort import _PINNED, range_bucket
+
+    sdf = spark.range(1000).selectExpr("id", "id * 2 as v")
+    before = [id(p) for p in _PINNED]
+    bucketed, n = range_bucket(sdf, "v")
+    assert n >= 1
+    assert [id(p) for p in _PINNED] == before
+    assert bucketed.filter("__pid < 0 or __pid >= %d" % n).count() == 0
